@@ -174,7 +174,7 @@ def segment_phrase_matches(by_term: dict[str, pd.DataFrame], terms: list[str],
                            stats: dict | None = None) -> list[tuple[int, int]]:
     """One (segment, phrase) evaluation → [(doc_id, n_matches)].
     Shared by the distributed UDF and the serving reader (the same
-    sharing discipline as wand.segment_topk).
+    sharing discipline as wand.block_topk).
 
     The verification is ONE batched ragged-array pass over ALL
     candidate docs (review r2: the former per-candidate Python loop was

@@ -82,8 +82,12 @@ def cosine_topk_df(emb: DataFrame, query_df: DataFrame, k: int = 10,
     (broadcast crossJoin) instead of a collected Python list — keeps
     the whole query lazy, so a registry entry never runs a separate
     driver-side `first()` job inside its timed region (r6). Scoring is
-    structurally shared with cosine_scores (_cosine_scored)."""
-    j = emb.crossJoin(F.broadcast(query_df.select(F.col(vec_col).alias("_qv"))))
+    structurally shared with cosine_scores (_cosine_scored).
+
+    `query_df` must hold EXACTLY ONE row. With none the result is
+    empty; the broadcast side is limit(1), so extra rows never multiply
+    the ranking, but which one is used is then unspecified."""
+    j = emb.crossJoin(F.broadcast(query_df.select(F.col(vec_col).alias("_qv")).limit(1)))
     s = _cosine_scored(j, F.col("_qv"), id_col, vec_col)
     return _exclude_and_rank(s, k, exclude_id)
 

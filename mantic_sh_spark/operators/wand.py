@@ -1,21 +1,18 @@
-"""Block-Max WAND top-k over the compressed index (U3/K2/K3/O2).
+"""Block-max top-k over the compressed index (U3/K2/K3/O2).
 
 Reference analogs: the partitioned per-chunk top-k + identical-
 comparator merge of src/parallel-mantic.ts:26-75 (here: per-SEGMENT
-WAND inside applyInPandas, merged by a rank window), and the
+top-k inside applyInPandas, merged by a rank window), and the
 early-termination heuristic of src/smart-filter.ts:289-297 (here: the
 principled version — skip every block whose max possible score cannot
 beat the current k-th best).
 
-Algorithm: Block-Max WAND (Ding & Suel, SIGIR 2011 — public
-literature). Per segment and query:
-  * one cursor per query term over its block list; blocks are decoded
-    LAZILY — a block skipped by the block-max check is never decoded
-    (that is where the speed comes from);
-  * bounded min-heap of size k with deterministic tie-break
-    (score desc, doc_id asc);
-  * pivot selection on term upper bounds (idf × segment max tf_norm),
-    refined by per-block maxima before any full evaluation.
+Algorithm: block-max pruning in the spirit of Block-Max WAND (Ding &
+Suel, SIGIR 2011 — public literature), run set-at-a-time in numpy
+(`block_topk`): block maxima bound elementary doc intervals, the
+best-bounded blocks seed the k-th best score θ, and only blocks whose
+interval bound can reach θ are ever decoded. Ties break
+deterministically (score desc, doc_id asc).
 
 idf uses GLOBAL df (summed across segments at query start), so scores
 are identical to the exhaustive engine; block maxima are
@@ -25,7 +22,7 @@ stay valid upper bounds under any df.
 
 from __future__ import annotations
 
-import heapq
+from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
@@ -33,310 +30,246 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.bm25 import B, K1, idf as idf_fn
-from ..functions.codec import decode_block
+from ..functions.codec import BLOCK_SIZE, decode_blocks, tf_norm
 from ..functions.tokenize import tokenize_query
 from ..sources.catalog import IndexPaths
 from .query import rank_topk
 
-INF = 1 << 62
-# Ranking everywhere (exhaustive engine, pure oracle, WAND heap) is on
-# scores rounded to SCORE_DECIMALS (fp-sum order is not deterministic
+# Ranking everywhere (exhaustive engine, pure oracle, this kernel) is
+# on scores rounded to SCORE_DECIMALS (fp-sum order is not deterministic
 # across partitions). EPS must cover the rounding half-step so the
-# block-max skip can never drop a doc that would TIE the heap floor
+# block-max skip can never drop a doc that would TIE the k-th best
 # after rounding: skip ⇒ true < θ - EPS ⇒ round(true) < θ. Looser
 # pruning by 1e-4, never an incorrect result.
 EPS = 1e-4
+# Each pruning round decodes at least GROW× the postings decoded so far,
+# and at least k and FLOOR postings: θ climbs from the best-bounded
+# blocks outward while the number of rounds stays logarithmic in the
+# decoded volume. FLOOR (16 full blocks) prices a round's fixed numpy
+# overhead in postings: lists shorter than that decode in one batch.
+GROW = 7
+FLOOR = 16 * BLOCK_SIZE
+
+_NO_DOCS = np.empty(0, dtype=np.int64)
 
 
-class _Cursor:
-    """Lazy-decoding posting-list cursor for one (term, segment)."""
+def _ranges(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Concatenated arange(s, s + l) over (starts, lens), vectorized."""
+    ends = np.cumsum(lens)
+    return np.arange(int(ends[-1]) if len(ends) else 0) + np.repeat(starts - ends + lens, lens)
 
-    __slots__ = ("first", "last", "bmax", "gaps", "tfs", "dls", "idf", "ub", "bf",
-                 "k1", "b", "avgdl", "nb", "bi", "docs", "tf_arr", "dl_arr", "pi", "cur",
-                 "stats")
 
-    def __init__(self, pdf: pd.DataFrame, idf: float, avgdl: float, k1: float, b: float,
-                 bound_factor: float = 1.0, stats: dict | None = None):
-        pdf = pdf.sort_values("first_doc")
-        self.first = pdf["first_doc"].to_numpy()
-        self.last = pdf["last_doc"].to_numpy()
-        self.bmax = pdf["block_max"].to_numpy()
-        self.gaps = pdf["doc_gaps"].tolist()
-        self.tfs = pdf["tfs"].tolist()
-        self.dls = pdf["dls"].tolist()
-        self.nb = len(self.first)
+class _Term:
+    """One query term's blocks as numpy columns, ordered by first_doc
+    (unique per term: a doc sits in at most one block of a term's
+    list), with a lazy decoder that serves blocks from the decoded
+    cache when the term's full decode is there."""
+
+    __slots__ = ("first", "last", "n", "seg", "ub", "off", "gaps", "tfs", "dls",
+                 "idf", "full", "chunks", "docs", "scores")
+
+    def __init__(self, pdf: pd.DataFrame, idf: float, bound_factors: dict, full):
+        first = pdf["first_doc"].to_numpy(np.int64)
+        order = np.argsort(first, kind="stable")
+        self.first = first[order]
+        self.last = pdf["last_doc"].to_numpy(np.int64)[order]
+        self.n = pdf["n"].to_numpy(np.int64)[order]
+        self.seg = pdf["segment_id"].to_numpy(np.int64)[order]
+        bmax = pdf["block_max"].to_numpy(np.float64)[order]
+        if bound_factors:
+            segs, inv = np.unique(self.seg, return_inverse=True)
+            bmax = bmax * np.array([bound_factors.get(int(s), 1.0) for s in segs])[inv]
+        self.ub = idf * bmax
+        self.off = np.zeros(len(order) + 1, dtype=np.int64)
+        np.cumsum(self.n, out=self.off[1:])
+        self.gaps = pdf["doc_gaps"].to_numpy()[order]
+        self.tfs = pdf["tfs"].to_numpy()[order]
+        self.dls = pdf["dls"].to_numpy()[order]
         self.idf = idf
-        # bound_factor ≥ 1 inflates build-time maxima when the global
-        # avgdl has drifted upward since this segment was built
-        # (tf_norm is monotone in avgdl with limit ratio new/old) —
-        # keeps the bound sound after incremental extends.
-        self.bf = bound_factor
-        self.ub = idf * float(self.bmax.max()) * bound_factor
-        self.k1, self.b, self.avgdl = k1, b, avgdl
-        self.bi = -1
-        self.docs = None
-        self.pi = 0
-        self.cur = -1
-        # optional read-amplification counter (serving observability):
-        # stats["blocks_decoded"] += 1 per lazy block decode
-        self.stats = stats
-        self.seek(0)
+        ok = full is not None and len(full[0]) == self.off[-1]
+        self.full = full if ok else None
+        self.chunks = []  # (block idx, docs, tfs, dls) decoded from bytes
+        self.docs, self.scores = [], []  # live postings, scored
 
-    def _enter(self, bi: int) -> None:
-        self.bi = bi
-        if bi >= self.nb:
-            self.docs = None
-            self.cur = INF
-            return
-        if self.stats is not None:
-            self.stats["blocks_decoded"] = self.stats.get("blocks_decoded", 0) + 1
-        self.docs, self.tf_arr, self.dl_arr = decode_block(self.gaps[bi], self.tfs[bi], self.dls[bi])
-
-    def seek(self, target: int) -> None:
-        """Advance to the first posting with doc_id >= target (monotone)."""
-        if self.cur >= target:
-            return
-        lo = max(self.bi, 0)
-        bi = lo + int(np.searchsorted(self.last[lo:], target, side="left"))
-        if bi >= self.nb:
-            self.bi = self.nb
-            self.cur = INF
-            return
-        if bi != self.bi or self.docs is None:
-            self._enter(bi)
-        self.pi = int(np.searchsorted(self.docs, target, side="left"))
-        self.cur = int(self.docs[self.pi])
-
-    def advance(self) -> None:
-        """Move to the next posting."""
-        self.pi += 1
-        if self.docs is not None and self.pi < len(self.docs):
-            self.cur = int(self.docs[self.pi])
+    def decode(self, j: np.ndarray, dead, avgdl: float, k1: float, b: float,
+               stats: dict | None) -> None:
+        """Decode blocks j (ascending), drop tombstoned docs (each
+        block checks its OWN segment's liveness array), score."""
+        if self.full is not None:
+            d, tf, dl = self.full
+            if len(j) < len(self.n):
+                pos = _ranges(self.off[j], self.n[j])
+                d, tf, dl = d[pos], tf[pos], dl[pos]
         else:
-            bi = self.bi + 1
-            if bi >= self.nb:
-                self.cur = INF
-                return
-            self._enter(bi)
-            self.pi = 0
-            self.cur = int(self.docs[0])
+            d, tf, dl = decode_blocks(self.n[j], self.gaps[j], self.tfs[j], self.dls[j])
+            self.chunks.append((j, d, tf, dl))
+            if stats is not None:
+                stats["blocks_decoded"] = stats.get("blocks_decoded", 0) + len(j)
+        if dead is not None:
+            segs = self.seg[j]
+            keep = None
+            for s in np.unique(segs):
+                arr = dead(int(s))
+                if arr is None or not len(arr):
+                    continue
+                p = np.minimum(np.searchsorted(arr, d), len(arr) - 1)
+                hit = (arr[p] == d) & np.repeat(segs == s, self.n[j])
+                keep = ~hit if keep is None else keep & ~hit
+            if keep is not None:
+                d, tf, dl = d[keep], tf[keep], dl[keep]
+        self.docs.append(d)
+        self.scores.append(self.idf * tf_norm(tf, dl, avgdl, k1, b))
 
-    def score(self) -> float:
-        tf = float(self.tf_arr[self.pi])
-        dl = float(self.dl_arr[self.pi])
-        return self.idf * tf * (self.k1 + 1.0) / (tf + self.k1 * (1.0 - self.b + self.b * dl / self.avgdl))
-
-    def _block_for(self, d: int) -> int:
-        lo = max(self.bi, 0)
-        return lo + int(np.searchsorted(self.last[lo:], d, side="left"))
-
-    def block_max_upto(self, d: int) -> float:
-        """Max score this cursor could contribute to doc d (shallow —
-        no decode)."""
-        bi = self._block_for(d)
-        if bi >= self.nb or self.first[bi] > d:
-            return 0.0
-        return self.idf * float(self.bmax[bi]) * self.bf
-
-    def next_boundary(self, d: int) -> int:
-        """Smallest doc id > d at which this cursor's block-max bound
-        can change (shallow)."""
-        bi = self._block_for(d)
-        if bi >= self.nb:
-            return INF
-        if self.first[bi] > d:
-            return int(self.first[bi])
-        return int(self.last[bi]) + 1
+    def full_decode(self):
+        """(docs, tfs, dls) of every block in first_doc order, or None
+        unless all of them were decoded from bytes by this query."""
+        if self.full is not None or sum(len(c[0]) for c in self.chunks) != len(self.n):
+            return None
+        if len(self.chunks) == 1:
+            return self.chunks[0][1:]
+        out = tuple(np.empty(int(self.off[-1]), dtype=np.int64) for _ in range(3))
+        for j, *cols in self.chunks:
+            pos = _ranges(self.off[j], self.n[j])
+            for o, c in zip(out, cols):
+                o[pos] = c
+        return out
 
 
-def block_max_wand(cursors: list[_Cursor], k: int,
-                   dead: "np.ndarray | None" = None) -> list[tuple[int, float]]:
-    """BMW top-k over one segment. Returns [(doc_id, score)] sorted by
-    (score desc, doc_id asc), len ≤ k. `dead` = sorted tombstoned doc
-    ids; dead docs are skipped at heap-push (live-docs check) so the
-    heap holds the k best LIVE docs — pruning bounds remain sound
-    because skipping only keeps θ lower (never higher) than the
-    all-docs run."""
-    # min-heap of (score, -doc_id): root = currently-worst kept result
-    heap: list[tuple[float, int]] = []
-
-    def theta() -> float:
-        return heap[0][0] if len(heap) == k else -1.0
-
-    active = cursors
-    while True:
-        active = [c for c in active if c.cur < INF]
-        if not active:
-            break
-        active.sort(key=lambda c: c.cur)
-        th = theta()
-        acc = 0.0
-        p = -1
-        for i, c in enumerate(active):
-            acc += c.ub
-            if acc >= th - EPS:
-                p = i
-                break
-        if p == -1:
-            break  # sum of all term bounds can't reach the heap floor
-        pivot = active[p].cur
-        if pivot >= INF:
-            break
-        # extend the pivot set across ties: every list already AT the
-        # pivot doc contributes to its score, so it must be inside the
-        # bound (and the d' cap below must start strictly beyond pivot)
-        while p + 1 < len(active) and active[p + 1].cur == pivot:
-            p += 1
-        # block-max refinement (shallow: no block decode)
-        bacc = 0.0
-        for c in active[: p + 1]:
-            bacc += c.block_max_upto(pivot)
-        if bacc < th - EPS:
-            # skip: jump past the earliest block boundary among the
-            # cursors that defined this bound — but never past the
-            # NEXT list's current doc (bacc only bounded cursors 0..p;
-            # docs ≥ active[p+1].cur get that list's contribution too,
-            # so the proof does not extend beyond it — Ding & Suel's d')
-            nxt = min(c.next_boundary(pivot) for c in active[: p + 1])
-            if p + 1 < len(active):
-                nxt = min(nxt, active[p + 1].cur)
-            target = max(pivot + 1, nxt)
-            # advance the highest-impact cursor (fewest future evals)
-            mover = max(active[: p + 1], key=lambda c: c.ub)
-            mover.seek(target)
-        elif active[0].cur == pivot:
-            alive = dead is None or len(dead) == 0 or not (
-                (j := int(np.searchsorted(dead, pivot))) < len(dead) and dead[j] == pivot
-            )
-            s = 0.0
-            if alive:
-                for c in active:
-                    if c.cur == pivot:
-                        s += c.score()
-            for c in active:
-                if c.cur == pivot:
-                    c.advance()
-            if alive:
-                item = (round(s, 4), -pivot)
-                if len(heap) < k:
-                    heapq.heappush(heap, item)
-                elif item > heap[0]:
-                    heapq.heapreplace(heap, item)
-        else:
-            # align: advance a lagging cursor up to the pivot
-            mover = max((c for c in active[:p] if c.cur < pivot), key=lambda c: c.ub)
-            mover.seek(pivot)
-    return sorted([(-nd, s) for s, nd in heap], key=lambda x: (-x[1], x[0]))
-
-
-# Per-segment engine choice: Block-Max WAND's per-doc evaluation loop
-# wins when a selective term drives skipping; when every query term is
-# common (or the query has one term), pruning cannot skip and the
-# vectorized term-at-a-time scorer is ~10× faster per posting. Both
-# are exact, so the choice is pure cost-based. TAAT decodes at most
-# TAAT_CAP postings per (segment, query) — above that, posting lists
-# are long enough that WAND's skipping dominates even without a rare
-# term (θ rises fast when k ≪ df).
-TAAT_CAP = 4_000_000
-TAAT_SELECTIVITY = 8  # TAAT unless some term is ≥8× rarer than the total
-
-
-def _decode_term_all(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Batch-decode ALL blocks of one (term, segment): one varint pass
-    per column for the whole list (the per-block decode_block call has
-    ~170µs fixed overhead; this is what makes full-list scoring cheap).
-    Blocks' first values are absolute doc ids → cumsum with per-block
-    rebase."""
-    from ..functions.codec import varint_decode
-
-    counts = pdf["n"].to_numpy().astype(np.int64)
-    gaps = varint_decode(b"".join(pdf["doc_gaps"])).astype(np.int64)
-    starts = np.zeros(len(counts), dtype=np.int64)
-    np.cumsum(counts[:-1], out=starts[1:])
-    c = np.cumsum(gaps)
-    base = c[starts] - gaps[starts]
-    docs = c - np.repeat(base, counts)
-    tfs = varint_decode(b"".join(pdf["tfs"])).astype(np.int64)
-    dls = varint_decode(b"".join(pdf["dls"])).astype(np.int64)
-    return docs, tfs, dls
-
-
-def _taat_topk(term_pdfs: list[tuple[str, pd.DataFrame, float]], avgdl: float, k: int,
-               k1: float, b: float, dead: "np.ndarray | None",
+def block_topk(by_term: dict[str, pd.DataFrame], terms: list[str],
+               idf_map: dict[str, float], avgdl: float, k: int,
+               k1: float, b: float, bound_factors: dict[int, float] | None = None,
+               dead: Callable[[int], np.ndarray | None] | None = None,
                stats: dict | None = None,
                decode_cache=None) -> list[tuple[int, float]]:
-    """Exact vectorized term-at-a-time top-k over one segment:
-    decode → per-posting scores → sort-merge accumulate by doc →
-    lexsort top-k. No per-doc Python.
+    """Exact BM25 top-k over the block frames of `terms` — the ONE
+    kernel behind the Spark UDF (one segment per call) and the serving
+    reader (all segments in one call, or one per call under budget_ms),
+    so every surface ranks identically by construction. Returns
+    [(doc_id, score)] sorted by (score desc, doc_id asc), len ≤ k.
 
-    `decode_cache` (optional, .get(term)/.put(term, value) — the
-    serving reader passes a byte-budgeted LRU namespaced per segment)
-    memoizes the decoded (docs, tfs, dls) arrays: TAAT-class terms are
-    the corpus-dense head of the vocabulary, and their decode is the
-    dominant per-query cost once the compressed frames are hot."""
-    from ..functions.codec import tf_norm
+    Frames carry segment_id; `bound_factors` (segment → factor ≥ 1,
+    avgdl drift since the segment was built) scales each block's
+    max; `dead` (segment → sorted tombstoned ids or None) is checked
+    per block against the block's own segment.
 
-    doc_parts, score_parts = [], []
-    for t, pdf, idf in term_pdfs:
-        dec = decode_cache.get(t) if decode_cache is not None else None
-        if dec is None:
-            if stats is not None:  # TAAT decodes every block of its lists
-                stats["blocks_decoded"] = stats.get("blocks_decoded", 0) + len(pdf)
-            dec = _decode_term_all(pdf)
-            if decode_cache is not None:
-                decode_cache.put(t, dec)
-        elif stats is not None:
-            stats["decoded_hits"] = stats.get("decoded_hits", 0) + 1
-        d, tf, dl = dec
-        doc_parts.append(d)
-        score_parts.append(idf * tf_norm(tf, dl, avgdl, k1, b))
-    docs = np.concatenate(doc_parts)
-    scores = np.concatenate(score_parts)
-    order = np.argsort(docs, kind="stable")
-    docs, scores = docs[order], scores[order]
-    starts = np.flatnonzero(np.concatenate(([True], docs[1:] != docs[:-1])))
-    uniq = docs[starts]
-    tot = np.add.reduceat(scores, starts)
-    if dead is not None and len(dead):
-        pos = np.searchsorted(dead, uniq)
-        hit = (pos < len(dead)) & (dead[np.minimum(pos, len(dead) - 1)] == uniq)
-        uniq, tot = uniq[~hit], tot[~hit]
-    r = np.round(tot, 4)
-    idx = np.lexsort((uniq, -r))[:k]
-    return list(zip(uniq[idx].tolist(), r[idx].tolist()))
+    Block-max pruning, vectorized — no per-doc Python:
+      1. every undecoded block's bound idf × block_max is summed over
+         elementary doc intervals (cut at each block's first_doc and
+         last_doc + 1). Blocks of one term may overlap (legacy
+         compactions); a doc sits at most once per term's list, so the
+         sum stays an upper bound.
+      2. the blocks under the highest-bound intervals are decoded and
+         scored; the k-th best (possibly partial) live doc score is θ.
+      3. decoded docs enter the intervals as exact points, and the
+         undecoded blocks overlapping an interval whose bound is
+         ≥ θ − EPS are decoded next (best bound first, growing
+         batches); the others are pruned for good. When none is left,
+         a doc under a pruned block scores < θ − EPS, i.e. ranks below
+         k docs whose scores are exact, so the top-k of the decoded
+         sums is exact.
+    Per-doc sums add terms in `terms` order, so the fp sum does not
+    depend on which round decoded which block.
 
-
-def segment_topk(by_term: dict[str, pd.DataFrame], terms: list[str],
-                 idf_map: dict[str, float], avgdl: float, k: int,
-                 k1: float, b: float, bound_factor: float = 1.0,
-                 dead: "np.ndarray | None" = None,
-                 stats: dict | None = None,
-                 decode_cache=None) -> list[tuple[int, float]]:
-    """One (segment, query) top-k with the cost-based TAAT/WAND choice.
-    Shared by the distributed UDF and the serving reader so both
-    surfaces rank identically by construction. `stats` (optional dict)
-    accumulates read-amplification counters — blocks_considered (block
-    rows of the consulted lists) and blocks_decoded (blocks actually
-    materialized; the gap between the two is WAND's skip win)."""
-    present = [t for t in terms if t in by_term and idf_map.get(t, 0.0) > 0.0]
-    if not present:
+    `stats` accumulates blocks_considered (block rows of the query's
+    lists), blocks_decoded (blocks decoded from bytes) and
+    decoded_hits (terms served from the decoded cache).
+    `decode_cache` (.get(term)/.put(term, value) — the serving reader
+    passes a byte-budgeted LRU, one namespace for its global call and
+    one per segment for its budgeted sweep) holds a term's
+    decoded (docs, tfs, dls) in first_doc block order; a term is cached
+    only when this query decoded all of its blocks."""
+    present = [t for t in terms if len(by_term.get(t, ())) and idf_map.get(t, 0.0) > 0.0]
+    if not present or k <= 0:
         return []
-    counts = [int(by_term[t]["n"].sum()) for t in present]
-    total = sum(counts)
+    if bound_factors and all(f == 1.0 for f in bound_factors.values()):
+        bound_factors = None
+    lists = []
+    for t in present:
+        full = decode_cache.get(t) if decode_cache is not None else None
+        lists.append(_Term(by_term[t], idf_map[t], bound_factors, full))
+        if stats is not None and lists[-1].full is not None:
+            stats["decoded_hits"] = stats.get("decoded_hits", 0) + 1
+    # all blocks of all terms, sorted by first_doc: interval ranges
+    # then run left to right, which keeps the reduceat below linear
+    which = np.concatenate([np.full(len(x.n), i) for i, x in enumerate(lists)])
+    local = np.concatenate([np.arange(len(x.n)) for x in lists])
+    first = np.concatenate([x.first for x in lists])
+    order = np.argsort(first, kind="stable")
+    which, local, first = which[order], local[order], first[order]
+    end = np.concatenate([x.last for x in lists])[order] + 1
+    ub = np.concatenate([x.ub for x in lists])[order]
+    n = np.concatenate([x.n for x in lists])[order]
     if stats is not None:
-        stats["blocks_considered"] = stats.get("blocks_considered", 0) + sum(
-            len(by_term[t]) for t in present
-        )
-    if len(present) == 1 or (total <= TAAT_CAP and min(counts) * TAAT_SELECTIVITY >= total):
-        return _taat_topk([(t, by_term[t], idf_map[t]) for t in present],
-                          avgdl, k, k1, b, dead, stats=stats,
-                          decode_cache=decode_cache)
-    cursors = [
-        _Cursor(by_term[t], idf_map[t], avgdl, k1, b, bound_factor=bound_factor,
-                stats=stats)
-        for t in present
-    ]
-    return block_max_wand(cursors, k, dead)
+        stats["blocks_considered"] = stats.get("blocks_considered", 0) + len(n)
+    # `open_` = blocks neither decoded nor pruned. Bounds only fall and
+    # θ only rises from round to round, so a pruned block stays pruned
+    # and leaves the interval sums: a doc it covers already had a bound
+    # below θ − EPS.
+    open_ = np.arange(len(n))
+    n_decoded = 0
+    while True:
+        batch = max(k, FLOOR, GROW * n_decoded)
+        # when every open block fits in this round's batch, decode them
+        # all without bounding them first
+        ranged = open_ if n[open_].sum() > batch else open_[:0]
+        if n_decoded or len(ranged):
+            per_term = [np.concatenate(x.docs) if x.docs else _NO_DOCS for x in lists]
+            docs = np.concatenate(per_term)
+            keys, inv = np.unique(np.concatenate((docs, first[ranged], end[ranged])),
+                                  return_inverse=True)
+            psum = np.zeros(len(keys))
+            at = 0
+            for x, d in zip(lists, per_term):
+                if len(d):
+                    psum += np.bincount(inv[at:at + len(d)], weights=np.concatenate(x.scores),
+                                        minlength=len(keys))
+                at += len(d)
+            seen = np.zeros(len(keys), dtype=bool)
+            seen[inv[:len(docs)]] = True
+            cand = np.flatnonzero(seen)
+            score = np.round(psum[cand], 4)
+            theta = (np.partition(score, len(score) - k)[len(score) - k]
+                     if len(score) >= k else -np.inf)
+            if not len(open_):
+                break
+        take = open_
+        if len(ranged):
+            lo, hi = inv[len(docs):len(docs) + len(open_)], inv[len(docs) + len(open_):]
+            bound = psum + np.cumsum(np.bincount(lo, ub[open_], len(keys))
+                                     - np.bincount(hi, ub[open_], len(keys)))
+            cuts = np.empty(2 * len(open_), dtype=np.intp)
+            cuts[0::2], cuts[1::2] = lo, hi
+            best = np.maximum.reduceat(bound, cuts)[0::2]
+            live = best >= theta - EPS
+            open_, best = open_[live], best[live]
+            if not len(open_):
+                break
+            # best bound first; among equals the larger block bound (the
+            # rarer term), whose decoded docs tighten the others' intervals
+            rank = np.lexsort((-ub[open_], -best))
+            rank = rank[: int(np.searchsorted(np.cumsum(n[open_[rank]]), batch)) + 1]
+            take = open_[rank]
+            left = np.ones(len(open_), dtype=bool)
+            left[rank] = False
+            open_ = open_[left]
+        else:
+            open_ = open_[:0]
+        n_decoded += int(n[take].sum())
+        for i, x in enumerate(lists):
+            mine = which[take] == i
+            if mine.any():
+                x.decode(np.sort(local[take][mine]), dead, avgdl, k1, b, stats)
+    if decode_cache is not None:
+        for t, x in zip(present, lists):
+            full = x.full_decode()
+            if full is not None:
+                decode_cache.put(t, full)
+    ids = keys[cand]
+    if len(score) > k:
+        sel = score >= theta
+        ids, score = ids[sel], score[sel]
+    top = np.lexsort((ids, -score))[:k]
+    return list(zip(ids[top].tolist(), score[top].tolist()))
 
 
 def _load_dead(dead_src, seg: int) -> "np.ndarray | None":
@@ -375,7 +308,6 @@ def _wand_udf(queries: dict[int, list[str]], idf_map: dict[str, float],
               tid2term: dict[int, str] | None = None):
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
         seg = int(pdf["segment_id"].iloc[0])
-        bf = (bound_factors or {}).get(seg, 1.0)
         dead = _load_dead(dead_src, seg)
         # posting rows carry the int64 tid; translate back to the query
         # term strings via the (query-sized) tid2term closure. Unknown
@@ -386,8 +318,8 @@ def _wand_udf(queries: dict[int, list[str]], idf_map: dict[str, float],
                    if int(t) in tid2term}
         out_q, out_d, out_s = [], [], []
         for qid, terms in queries.items():
-            for doc, score in segment_topk(by_term, terms, idf_map, avgdl, k,
-                                           k1, b, bf, dead):
+            for doc, score in block_topk(by_term, terms, idf_map, avgdl, k, k1, b,
+                                         bound_factors, lambda _s: dead):
                 out_q.append(qid)
                 out_d.append(doc)
                 out_s.append(score)
@@ -605,8 +537,8 @@ def wand_topk(
     k1: float = K1,
     b: float = B,
 ) -> DataFrame:
-    """Top-k via the index: per-segment BMW (applyInPandas) → global
-    rank-window merge. Parquet scan is pruned to the query terms
+    """Top-k via the index: per-segment block_topk (applyInPandas) →
+    global rank-window merge. Parquet scan is pruned to the query terms
     (predicate pushdown on `term` + row-group stats from the
     sort-by-term layout)."""
     paths = IndexPaths(index_dir)
@@ -625,7 +557,7 @@ def wand_topk(
     if not tid2term:
         return spark.createDataFrame([], "query_id int, doc_id long, score double, rank int")
 
-    # project to exactly the columns the cursors read BEFORE the
+    # project to exactly the columns the kernel reads BEFORE the
     # groupBy exchange — on a positional index this keeps the (largest)
     # positions column out of the scan and shuffle entirely. Postings
     # filter on the int64 tid (row-group stats on the tid-sorted

@@ -373,11 +373,14 @@ def q_stale_diff(spark, sf_dir):
     doc = F.col("doc_id")
     in_old = F.pmod(doc, F.lit(5)) != 0
     in_new = F.pmod(doc, F.lit(7)) != 0
-    # v_old = n_chars, v_new = n_chars + (doc_id%3==0) → modified iff doc_id%3==0
+    # v_old = n_chars, v_new = n_chars + (doc_id%3==0) → modified iff
+    # doc_id%3==0 AND n_chars is non-null (NULL <> NULL is not true in
+    # the full-outer form, so a NULL n_chars is never 'modified')
     status = (
         F.when(~in_old & in_new, F.lit("added"))
         .when(in_old & ~in_new, F.lit("deleted"))
-        .when(in_old & in_new & (F.pmod(doc, F.lit(3)) == 0), F.lit("modified"))
+        .when(in_old & in_new & (F.pmod(doc, F.lit(3)) == 0) & F.col("n_chars").isNotNull(),
+              F.lit("modified"))
     )
     return (
         d.select("doc_id", status.alias("status"))

@@ -42,9 +42,3 @@ def read_schema_columns(df: DataFrame) -> list[str]:
             return [c.split(":")[0].strip() for c in cols if ":" in c]
     return []
 
-
-def codegen_stage_count(df: DataFrame) -> int:
-    """Number of WholeStageCodegen spans — wider is better for the
-    JVM-side hot path."""
-    plan = explain_str(df)
-    return plan.count("WholeStageCodegen")

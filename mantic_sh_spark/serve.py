@@ -6,8 +6,8 @@ README.md:82-85).
 Architecture: Spark is the BUILD/ANALYTICS plane; serving replicas run
 this module — a long-lived `IndexReader` that reads the exact parquet
 artifacts the Spark jobs commit, via pyarrow row-group-pruned reads,
-and executes the SAME per-segment kernels the distributed path uses
-(`operators/wand.py::segment_topk` for BM25,
+and executes the SAME kernels the distributed path uses
+(`operators/wand.py::block_topk` for BM25,
 `operators/phrase.py::segment_phrase_matches` for positional phrase /
 proximity queries). No Spark job
 — and no JVM — is on the per-query path, so latency is decode-bound
@@ -50,26 +50,6 @@ from .sources.catalog import IndexPaths
 _POSTING_COLS = ["tid", "first_doc", "last_doc", "block_max", "n",
                  "doc_gaps", "tfs", "dls"]
 
-# Posting volume above which a WAND-hopeless (dense) query routes to
-# the per-segment sliced TAAT sweep instead of the global kernel: one
-# global decode of N postings allocates ~10 N-sized temporaries, which
-# turns memory-bandwidth-bound once they outgrow cache (~50 MB here),
-# while per-segment slices stay cache-resident (topk strategy split).
-_GLOBAL_TAAT_SPILL = 2_000_000
-
-# Tombstone-count bound on the global-kernel liveness union: above this
-# many total tombstone rows the reader refuses to materialize
-# _dead_union (8 B/id resident per replica, ~2x transiently during the
-# concatenate+sort) and routes global-kernel-eligible queries to the
-# per-segment sweep, whose liveness input is ONE segment's array at a
-# time. 8M ids = 64 MB union — a sane replica budget; a heavily-churned
-# index past it should purge-merge, which resets the count to zero.
-# The in-flux merge window (_liveness_union) keeps the union regardless:
-# the sweep's own liveness is the union there, so falling back saves
-# nothing and the window is fold-bounded.
-_DEAD_UNION_CAP = 8_000_000
-
-
 class TierBudgetExceeded(ValueError):
     """A tiered query where EVERY term's tier-field doc list exceeds
     the reader's materialization budget (IndexReader._TIER_DF_CAP):
@@ -80,18 +60,18 @@ class TierBudgetExceeded(ValueError):
     a distributed full-corpus pass, the semantics' native cost), or
     raise the cap on a reader with the memory to back it."""
 
-# Byte budget for the per-segment tombstone-array cache (the sweep's
+# Byte budget for the per-segment tombstone-array cache (the kernel's
 # liveness input): without it a query mix touching every segment of a
 # heavily-churned index would converge _dead_cache to the full
-# tombstone volume resident — the very bound the union cap claims
-# (review r5 finding). LRU eviction; one segment's array is the unit.
+# tombstone volume resident (review r5 finding). LRU eviction; one
+# segment's array is the unit.
 _DEAD_CACHE_BUDGET = 256 * 1024 * 1024
 
 
 # Byte budget for the decoded-postings LRU: decoded arrays run ~12x
 # their varint form, so this cache holds far fewer ENTRIES than the
 # compressed block LRU — but each hit skips the decode pass that
-# dominates dense-term (TAAT/phrase) queries once frames are hot
+# dominates dense-term (BM25/phrase) queries once frames are hot
 # (measured: the stop-word-phrase p50 is ~100% decode+kernel, 0% fetch).
 _DECODE_BUDGET = 256 * 1024 * 1024
 
@@ -177,23 +157,6 @@ class _NsDecodeCache:
         self._lru.put(self._ns + (term,), value, generation=self._gen)
 
 
-def _frame_disjoint(pdf) -> bool:
-    """Global-kernel precondition for ONE term's blocks frame: sorted
-    by first_doc, block [first, last] intervals are non-overlapping —
-    true for any freshly built or extended index (segments own disjoint
-    ascending doc-id ranges); a COMPACTED merge of NON-CONTIGUOUS
-    source segments re-encodes blocks that can span the stride gap and
-    envelop a live segment's range, where _Cursor's searchsorted seek
-    would silently mis-rank (review r4 finding — such terms fall back
-    to the per-segment sweep)."""
-    if len(pdf) < 2:
-        return True
-    first = pdf["first_doc"].to_numpy()
-    last = pdf["last_doc"].to_numpy()
-    order = np.argsort(first, kind="stable")
-    return bool(np.all(first[order][1:] > last[order][:-1]))
-
-
 class IndexReader:
     """Long-lived single-index reader: metadata memo + hot-term block
     LRU + per-term df cache. THREAD-SAFE for concurrent queries under a
@@ -203,9 +166,9 @@ class IndexReader:
     the same lock so a reload can never interleave with a cache fill
     (no torn refresh). Observability: per-query and cumulative
     read-amplification counters — segments_touched, blocks_considered,
-    blocks_decoded, terms_cold — via `counters()`; the considered/
-    decoded gap is WAND's skip win, the number an operator watches at
-    100× scale."""
+    blocks_decoded, decoded_hits, terms_cold — via `counters()`; the
+    considered/decoded gap is the block-max skip win, the number an
+    operator watches at 100× scale."""
 
     def __init__(self, index_dir: str, k1: float = K1, b: float = B,
                  max_hot_terms: int = 4096):
@@ -278,7 +241,7 @@ class IndexReader:
         cs = pq.read_table(self.paths.collection_stats).to_pydict()
         self.n_docs, self.avgdl = int(cs["n_docs"][0]), float(cs["avgdl"][0])
 
-        # per-segment WAND bound inflation under avgdl drift (same rule
+        # per-segment block-max bound inflation under avgdl drift (same rule
         # as operators/wand.py _index_meta), plus reader live-segment
         # gating: the manifest's fold-protocol rows, not the partition
         # listing, decide which segments serve (functions/liveness.py —
@@ -315,16 +278,14 @@ class IndexReader:
         self._dead_segs: frozenset[int] = frozenset()
         self._dead_cache: OrderedDict[int, np.ndarray] = OrderedDict()
         self._dead_cache_bytes = 0
-        self._dead_total = 0  # total tombstone rows (union-cap input)
         t = self._dataset_or_none(self.paths.tombstones)
         # a purge deletes every tombstone PARTITION but leaves the root
         # dir: the dataset then exists with a column-less schema — treat
         # it as clean, don't crash the refresh.
         # METADATA-ONLY census (review r5 finding): partition membership
-        # comes from the hive fragment paths and the row count from
-        # parquet footers — materializing the segment_id column here
-        # would allocate one int64 per tombstone (8 GB at 1e9) on every
-        # refresh, exactly the array the union cap exists to avoid.
+        # comes from the hive fragment paths — materializing the
+        # segment_id column here would allocate one int64 per tombstone
+        # (8 GB at 1e9) on every refresh.
         if t is not None and "segment_id" in t.schema.names:
             import re as _re
 
@@ -334,7 +295,6 @@ class IndexReader:
                 if m:
                     segs.add(int(m.group(1)))
             self._dead_segs = frozenset(segs)
-            self._dead_total = t.count_rows()
 
         # an empty-corpus index commits only collection_stats + manifest
         # (no postings/terms/docs dirs) — serve it as empty, not a crash
@@ -350,7 +310,7 @@ class IndexReader:
         self._df_cache.clear()
         self._dead_cache.clear()
         self._dead_cache_bytes = 0
-        self._dead_union_cache = None  # global-kernel liveness input
+        self._dead_union_cache = None  # in-flux merge window liveness
         # counters restart with the new index state (counters() promises
         # totals "since construction/refresh"); the epoch bump
         # invalidates every thread's thread-local last_stats
@@ -358,8 +318,7 @@ class IndexReader:
         self._epoch += 1
         self.totals = {"queries": 0, "segments_touched": 0,
                        "blocks_considered": 0, "blocks_decoded": 0,
-                       "terms_cold": 0, "global_fallbacks": 0,
-                       "dead_union_fallbacks": 0, "decoded_hits": 0,
+                       "terms_cold": 0, "decoded_hits": 0,
                        "tier_stream_intersects": 0}
 
     @staticmethod
@@ -492,8 +451,7 @@ class IndexReader:
         return arr if len(arr) else None
 
     def _fetch_blocks(self, lru: OrderedDict, columns: list[str],
-                      terms: list[str], stats: dict | None = None,
-                      verdicts: bool = False) -> dict[str, "object"]:
+                      terms: list[str], stats: dict | None = None) -> dict[str, "object"]:
         """Shared LRU-cached block fetch (BM25 and positional paths
         differ only in cache + column list): term → tid resolution via
         the terms directory, row-group-pruned read of the missing tids,
@@ -555,16 +513,6 @@ class IndexReader:
                 for tid, g in pdf.groupby("tid"):
                     t = tid2term[int(tid)]
                     g = g.reset_index(drop=True)
-                    if verdicts:
-                        # memoized global-kernel precondition, attached
-                        # to the FRAME (.attrs) rather than a term-keyed
-                        # dict: the verdict then always pairs with the
-                        # exact frame a query holds — a term-keyed memo
-                        # could pair a post-refresh verdict with a
-                        # pre-refresh frame across two racing refreshes
-                        # (review r4 finding) — and is evicted with the
-                        # frame (no unbounded per-term growth)
-                        g.attrs["disjoint"] = _frame_disjoint(g)
                     out[t] = g
                     found.add(t)
                     if fresh:
@@ -572,8 +520,6 @@ class IndexReader:
                 for t in missing:
                     if t not in found:
                         empty = pdf.iloc[0:0]
-                        if verdicts:
-                            empty.attrs["disjoint"] = True
                         out[t] = empty
                         if fresh:
                             lru[t] = empty
@@ -584,7 +530,7 @@ class IndexReader:
     def _blocks(self, terms: list[str], stats: dict | None = None) -> dict[str, "object"]:
         """term → pandas blocks frame (with segment_id), LRU-cached."""
         return self._fetch_blocks(self._blocks_lru, _POSTING_COLS + ["segment_id"], terms,
-                                  stats=stats, verdicts=True)
+                                  stats=stats)
 
     def urls(self, doc_ids: list[int]) -> dict[int, str]:
         """doc_id → url via row-group-pruned docs reads (docs are
@@ -637,8 +583,9 @@ class IndexReader:
     def topk(self, query: str, k: int = 10,
              budget_ms: float | None = None) -> list[tuple[int, float]]:
         """[(doc_id, score)] — value-identical to wand_topk (same
-        per-segment kernel — segment_topk's cost-based TAAT/WAND choice
-        — same rounding, same tie-break).
+        kernel — operators/wand.py::block_topk — same rounding, same
+        tie-break). One global kernel call over every segment's blocks,
+        or, under budget_ms, one call per segment.
 
         budget_ms is the ST4 timeout guard (reference: the search
         timeout that returns partial results rather than hanging an
@@ -679,7 +626,7 @@ class IndexReader:
 
     def _topk_attempt(self, query: str, k: int, budget_ms: float | None,
                       stats: dict, t0: float) -> list[tuple[int, float]]:
-        from .operators.wand import segment_topk
+        from .operators.wand import block_topk
 
         self.truncated = False
         if self._postings is None:
@@ -695,130 +642,43 @@ class IndexReader:
         dgen = self._decoded.generation
         blocks = self._blocks(sorted(idf_map), stats=stats)
         qterms = sorted(idf_map)
+        if budget_ms is None:
+            # ONE kernel call over every segment's blocks: θ climbs
+            # globally, and each block checks its own segment's
+            # liveness and bound factor
+            stats["strategy"] = "global"
+            segs = np.concatenate([pdf["segment_id"].to_numpy() for pdf in blocks.values()])
+            stats["segments_touched"] = len(np.unique(segs))
+            return block_topk(blocks, qterms, idf_map, self.avgdl, k, self.k1, self.b,
+                              self.bound_factors, self._dead, stats,
+                              _NsDecodeCache(self._decoded, ("k", -1), dgen))
+        # ST4 budgeted query: one call per segment, deadline checked
+        # between segments, so at least one segment always completes and
+        # partial results stay segment-aligned
+        stats["strategy"] = "segments"
+        per_seg: dict[int, dict[str, object]] = {}
+        for t, pdf in blocks.items():
+            for seg, g in pdf.groupby("segment_id"):
+                per_seg.setdefault(int(seg), {})[t] = g
         hits: list[tuple[int, float]] = []
-        # Execution-strategy split (exactness is unaffected — both
-        # forms are exact). WAND pruning is hopeless exactly when even
-        # the RAREST query term is dense in the corpus (block maxima
-        # then barely vary, θ never skips, and the Python pivot walk
-        # visits ~every doc): single terms and all-head combos. Those
-        # queries run the per-SEGMENT sliced TAAT sweep — each slice's
-        # vectorized decode stays cache-resident, while one global
-        # decode allocates corpus-sized temporaries and turns memory-
-        # bandwidth-bound (measured 5x slower on 8M-doc head terms on
-        # this bandwidth-starved box). Everything else runs the ONE
-        # global kernel below (mid/needle combos: measured 64 ms p50 at
-        # 8M docs vs 200+ ms swept).
-        from .operators.wand import TAAT_SELECTIVITY
-
-        counts = [int(blocks[t]["n"].sum()) for t in qterms if len(blocks[t])]
-        total = sum(counts)
-        # dense_min: even the rarest term is corpus-dense (θ hopeless);
-        # the min*sel >= total clause mirrors segment_topk's OWN TAAT
-        # predicate so a skewed multi-term query the kernel would run
-        # as one giant global TAAT is routed to the sweep too (review
-        # r4 finding: the two cost models must agree above the spill)
-        dense_min = bool(counts) and (
-            min(counts) * TAAT_SELECTIVITY >= max(1, self.n_docs)
-            or min(counts) * TAAT_SELECTIVITY >= total
-        )
-        # the sliced sweep only pays off once the global decode's
-        # temporaries outgrow cache — below this posting volume the
-        # global kernel wins for every query class
-        taat_class = (len(counts) <= 1 or dense_min) and total >= _GLOBAL_TAAT_SPILL
-        # per-term global-kernel precondition, memoized ON each frame
-        # (.attrs, set once at fetch) so the verdict always describes
-        # the exact frame this query holds — immune to refresh races by
-        # construction. A violation (non-contiguous compacted merge)
-        # falls back to the sweep and is COUNTED so the latency cliff
-        # is diagnosable from read-amp observability. A frame without
-        # the memo (e.g. rescaled/derived) is verified directly — never
-        # assume-True on an unverified frame
-        ok_global = all(
-            v if (v := blocks[t].attrs.get("disjoint")) is not None
-            else _frame_disjoint(blocks[t])
-            for t in qterms
-        )
-        if budget_ms is None and not taat_class and not ok_global:
-            stats["global_fallbacks"] = 1
-        # union-cap route (what's-wrong r4 #2): a heavily-churned index
-        # can hold ~1e9 live tombstones between purge-merges — the
-        # global kernel's sorted union would be an 8 GB resident array
-        # per replica. Above the cap the sweep serves instead (its
-        # liveness touches one segment's array at a time); COUNTED so
-        # the latency shift is diagnosable from read-amp counters.
-        dead_ok = self._dead_total <= _DEAD_UNION_CAP or self._liveness_union
-        if budget_ms is None and not taat_class and ok_global and not dead_ok:
-            stats["dead_union_fallbacks"] = 1
-        if budget_ms is None and not taat_class and ok_global and dead_ok:
-            # ONE GLOBAL kernel run over every segment's blocks:
-            # segments own disjoint ascending doc-id ranges, so the
-            # per-term multi-segment frames are valid posting lists
-            # after the cursor's first_doc sort, and the WAND heap
-            # threshold climbs GLOBALLY — one cursor set instead of a
-            # per-segment Python sweep (per-query cost stops growing
-            # with segment count: at 128 segments the swept form paid
-            # 128 kernel setups and decoded ≥k docs per segment).
-            # Per-segment bound factors fold in by pre-scaling each
-            # block's max (bounds only — scoring is untouched); rank
-            # identity with the swept form is by construction and
-            # pinned by test + fuzz.
-            nonempty = {t: pdf for t, pdf in blocks.items() if len(pdf)}
-            segs: set[int] = set()
-            for pdf in nonempty.values():
-                segs.update(int(s) for s in np.unique(pdf["segment_id"].to_numpy()))
-            stats["segments_touched"] = len(segs)
-            if any(self.bound_factors.get(s, 1.0) != 1.0 for s in segs):
-                nonempty = {
-                    t: pdf.assign(
-                        block_max=pdf["block_max"].to_numpy()
-                        * pdf["segment_id"].map(self.bound_factors).fillna(1.0).to_numpy()
-                    )
-                    for t, pdf in nonempty.items()
-                }
-            hits = segment_topk(nonempty, qterms, idf_map, self.avgdl, k,
-                                self.k1, self.b, bound_factor=1.0,
-                                dead=self._dead_union(), stats=stats,
-                                decode_cache=_NsDecodeCache(self._decoded, ("k", -1), dgen))
-        else:
-            # Per-segment sweep: ST4 budgeted queries (deadline checked
-            # between segments, so at least one segment always completes
-            # and partial results stay segment-aligned) AND TAAT-class
-            # queries (cache-resident sliced decode — see above).
-            per_seg: dict[int, dict[str, object]] = {}
-            for t, pdf in blocks.items():
-                if not len(pdf):
-                    continue
-                for seg, g in pdf.groupby("segment_id"):
-                    per_seg.setdefault(int(seg), {})[t] = g
-            for i, (seg, by_term) in enumerate(sorted(per_seg.items())):
-                if (budget_ms is not None and i > 0
-                        and (time.time() - t0) * 1e3 > budget_ms):
-                    self.truncated = True
-                    break
-                stats["segments_touched"] += 1
-                hits.extend(
-                    segment_topk(by_term, qterms, idf_map, self.avgdl, k,
-                                 self.k1, self.b,
-                                 bound_factor=self.bound_factors.get(seg, 1.0),
-                                 dead=self._dead(seg), stats=stats,
-                                 decode_cache=_NsDecodeCache(self._decoded, ("k", seg), dgen))
-                )
+        for i, (seg, by_term) in enumerate(sorted(per_seg.items())):
+            if i > 0 and (time.time() - t0) * 1e3 > budget_ms:
+                self.truncated = True
+                break
+            stats["segments_touched"] += 1
+            hits.extend(
+                block_topk(by_term, qterms, idf_map, self.avgdl, k, self.k1, self.b,
+                           self.bound_factors, self._dead, stats,
+                           _NsDecodeCache(self._decoded, ("k", seg), dgen))
+            )
         hits.sort(key=lambda x: (-x[1], x[0]))
         return hits[:k]
 
-    @staticmethod
-    def _blocks_globally_disjoint(blocks: dict) -> bool:
-        """Direct (non-memoized) form of the global-kernel premise —
-        every term's block intervals non-overlapping when sorted by
-        first_doc. The hot path uses per-term verdicts memoized at LRU
-        fetch (frame .attrs["disjoint"]); this form exists for tests and
-        diagnostics."""
-        return all(_frame_disjoint(pdf) for pdf in blocks.values())
-
     def _dead_union(self) -> "np.ndarray | None":
         """Sorted union of ALL segments' tombstoned doc ids, built
-        lazily and reset by refresh() — the liveness input of the
-        global-kernel path. This is serving-REPLICA state (the same
+        lazily and reset by refresh() — the liveness of every segment
+        while a merge fold sits between its barriers (_dead routes
+        here only then). This is serving-REPLICA state (the same
         arrays `_dead_cache` already holds, merged once), not a query
         closure: the no-global-tombstone-array invariant targets plans
         and closures shipped to Spark executors, where every query
@@ -855,8 +715,7 @@ class IndexReader:
             # straight into totals at the stream site (the tiered fill
             # path hands stats recording to topk(), which would drop it)
             for key in ("segments_touched", "blocks_considered",
-                        "blocks_decoded", "terms_cold", "global_fallbacks",
-                        "dead_union_fallbacks", "decoded_hits"):
+                        "blocks_decoded", "terms_cold", "decoded_hits"):
                 self.totals[key] += stats.get(key, 0)
 
     def counters(self) -> dict:
@@ -997,7 +856,7 @@ class IndexReader:
         decoded-LRU-cached under ("s", term)) and do ONE searchsorted.
         Docs matching no term score 0.0. Rounding matches rank_topk (4
         decimals) so tier ladders rank identically to the batch mode."""
-        from .functions.codec import decode_block
+        from .functions.codec import decode_block, decode_blocks
 
         out = np.zeros(len(doc_ids), dtype=np.float64)
         if not len(doc_ids):
@@ -1017,12 +876,11 @@ class IndexReader:
                 # per-block path below, which stays within the frame's
                 # memory envelope
                 if sweep and dfs[t] <= self._SWEEP_DF_CAP:
-                    from .operators.wand import _decode_term_all
-
                     cache = _NsDecodeCache(self._decoded, ("s", -1), dgen)
                     dec = cache.get(t)
                     if dec is None:
-                        d, tf, dl = _decode_term_all(pdf)
+                        d, tf, dl = decode_blocks(pdf["n"], pdf["doc_gaps"], pdf["tfs"],
+                                                  pdf["dls"])
                         order = np.argsort(d, kind="stable")
                         dec = (d[order], tf[order], dl[order])
                         cache.put(t, dec)
@@ -1039,19 +897,16 @@ class IndexReader:
                          d: "np.ndarray", tf: "np.ndarray", dl: "np.ndarray",
                          idf: float) -> None:
         """Add one term's BM25 contribution for the doc-sorted postings
-        (d, tf, dl) into `out` aligned to sorted `doc_ids` — the ONE
-        copy of the scoring formula both _scores_array strategies share
-        (sweep full-decode and per-block), so they cannot diverge."""
+        (d, tf, dl) into `out` aligned to sorted `doc_ids` — shared by
+        both _scores_array strategies (sweep full-decode and per-block),
+        scoring with codec.tf_norm like the top-k kernel."""
+        from .functions.codec import tf_norm
+
         j = np.searchsorted(d, doc_ids)
         ok = (j < len(d)) & (d[np.minimum(j, len(d) - 1)] == doc_ids)
         if not ok.any():
             return
-        tfv = tf[j[ok]].astype(np.float64)
-        dlv = dl[j[ok]].astype(np.float64)
-        out[ok] += (
-            idf * tfv * (self.k1 + 1.0)
-            / (tfv + self.k1 * (1.0 - self.b + self.b * dlv / self.avgdl))
-        )
+        out[ok] += idf * tf_norm(tf[j[ok]], dl[j[ok]], self.avgdl, self.k1, self.b)
 
     def _tier_specs(self) -> list[tuple[int, str]]:
         """Ordered (ord, field-dir name) pairs from tier_index_meta, or

@@ -54,38 +54,3 @@ def test_segment_partition_pruning(spark, small_corpus):
     plan = explain_str(one_seg)
     # partition filter must appear as PartitionFilters, not a post-scan Filter
     assert "PartitionFilters" in plan and "segment_id" in plan.split("PartitionFilters", 1)[1].split("]", 1)[0]
-
-
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """Both sides bucketed by doc_id at write time → the join must plan
-    with ZERO shuffles (no Exchange) — the co-located-join guarantee
-    the docs ⋈ priors pattern relies on at scale."""
-    from pyspark.sql import functions as F
-
-    from mantic_sh_spark.plans.explain import explain_str
-    from mantic_sh_spark.sources.bucketing import colocated_join, write_bucketed
-
-    base = spark.range(2000).select(
-        F.col("id").alias("doc_id"), (F.col("id") % 97).alias("x")
-    )
-    side = spark.range(2000).select(
-        F.col("id").alias("doc_id"), (F.col("id") % 13).cast("double").alias("prior")
-    )
-    import shutil
-
-    spark.sql("DROP TABLE IF EXISTS bkt_docs")
-    spark.sql("DROP TABLE IF EXISTS bkt_priors")
-    wh = spark.conf.get("spark.sql.warehouse.dir").replace("file:", "")
-    shutil.rmtree(f"{wh}/bkt_docs", ignore_errors=True)
-    shutil.rmtree(f"{wh}/bkt_priors", ignore_errors=True)
-    write_bucketed(base, "bkt_docs", n_buckets=8)
-    write_bucketed(side, "bkt_priors", n_buckets=8)
-
-    joined = colocated_join(spark, "bkt_docs", "bkt_priors")
-    plan = explain_str(joined, "simple")
-    assert "Exchange hashpartitioning" not in plan, plan
-    assert "SortMergeJoin" in plan
-    assert joined.count() == 2000
-    # sanity: the same merge join over plain (unbucketed) data DOES shuffle
-    plain = base.hint("merge").join(side, "doc_id")
-    assert "Exchange hashpartitioning" in explain_str(plain, "simple")

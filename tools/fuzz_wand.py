@@ -1,6 +1,6 @@
 """Randomized rank-identity campaign across adversarial index layouts
 (tiny blocks, tiny salt chunks, 1-5 segments, optional compacting
-merges): the distributed engine (wand_topk — cost-routed TAAT/WAND)
+merges): the distributed engine (wand_topk — the block-max kernel per segment)
 must equal exhaustive BM25, and the serving reader (serve.IndexReader,
 no Spark on the query path) must equal the distributed engine.
 
