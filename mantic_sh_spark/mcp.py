@@ -354,20 +354,11 @@ class McpServer:
                 if kw["phrase"] or sid or kw["budget_ms"] is not None:
                     raise ValueError(
                         "tiered=true is exclusive with phrase/sessionId/budgetMs")
-                from .functions.tokenize import tokenize_query
-
                 rows = reader.tiered_topk(args["query"], k=k)
-                ids = [d for d, _, _ in rows]
-                url_map = reader.urls(ids)
-                snip_map = (reader.snippets(ids, tokenize_query(args["query"]))
-                            if kw["with_snippets"] else {})
-                results = [
-                    {"rank": i + 1, "doc_id": d, "tier": t, "score": s,
-                     "url": url_map.get(d),
-                     **({"snippet": snip_map.get(d)}
-                        if kw["with_snippets"] else {})}
-                    for i, (d, t, s) in enumerate(rows)
-                ]
+                results = reader.attach_docs(
+                    [{"rank": i + 1, "doc_id": d, "tier": t, "score": s}
+                     for i, (d, t, s) in enumerate(rows)],
+                    args["query"], with_snippets=kw["with_snippets"])
             elif sid:
                 from .sessions import boosted_search
 

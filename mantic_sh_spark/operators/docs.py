@@ -35,6 +35,36 @@ from ..functions.codec import SEG_STRIDE  # noqa: E402
 # Salted range-chunk inside a segment: postings for one (term, chunk)
 # encode together; chunks concatenate in doc-id order with no re-sort.
 CHUNK_SIZE = 1 << 14
+# Target docs row-group size. At Spark's default (128 MB) a whole
+# segment is ONE row group, and a serving read of ≤k result docs would
+# decompress every touched segment's full url/text chunks. Small row
+# groups let serve.IndexReader._doc_fields decode only the row groups
+# whose doc_id statistics hold the ids. parquet-mr checks the size no
+# earlier than every 100 rows, so short docs land in 100-row groups.
+DOCS_ROW_GROUP_BYTES = 64 * 1024
+
+
+def write_docs(df: DataFrame, path: str, mode: str = "overwrite",
+               partitioned: bool = True) -> None:
+    """The ONLY docs-table writer (build docs stage, extend/upsert
+    appends, purge rewrites) — it fixes the row-group size the serving
+    reader's pruning relies on.
+
+    partitioned=True writes the hive table root (partitionBy
+    segment_id); the caller's rows must already be doc_id-ordered
+    within each segment (build_docs' window order is), so every file's
+    row groups cover disjoint, ascending doc_id ranges. partitioned=False
+    rewrites ONE segment dir: the rows are gathered into one file sorted
+    by doc_id, whatever plan (broadcast or sort-merge anti-join)
+    produced them. Layout only decides how many row groups a fetch
+    decodes; the reader checks every row group's statistics, so any
+    layout still reads correctly."""
+    if not partitioned:
+        df = df.coalesce(1).sortWithinPartitions("doc_id")
+    w = df.write.mode(mode).option("parquet.block.size", DOCS_ROW_GROUP_BYTES)
+    if partitioned:
+        w = w.partitionBy("segment_id")
+    w.parquet(path)
 
 
 def build_docs(

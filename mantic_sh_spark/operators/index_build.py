@@ -48,7 +48,7 @@ from ..functions import codec
 from ..functions.codec import encode_stream_fn
 from ..functions.bm25 import B, K1
 from ..sources.catalog import IndexPaths, append_manifest, done_segments, read_or_none, write_small_parquet
-from .docs import build_docs, doc_stats
+from .docs import build_docs, doc_stats, write_docs
 
 # On-disk index format version — bump on any layout/schema change so
 # cached test/oracle indexes rebuild instead of failing on old columns
@@ -58,8 +58,10 @@ from .docs import build_docs, doc_stats
 #  v5: collection_stats carries exact integer `sum_dl` so incremental
 #  folds update global stats from observed deltas instead of re-scanning
 #  the whole norms table — at 10^12 docs that scan is the extend's
-#  dominant fixed cost)
-INDEX_FORMAT = 5
+#  dominant fixed cost;
+#  v6: docs files written in ~64 KB row groups (docs.write_docs) so the
+#  serving reader decodes only the row groups holding its result ids)
+INDEX_FORMAT = 6
 
 BLOCK_ROW_SCHEMA = (
     "tid long, segment_id int, first_doc long, last_doc long, "
@@ -684,12 +686,7 @@ def build_index(
         count_segs = n_segments <= _OBS_SEG_CAP
         if count_segs:
             exprs += segment_count_exprs(range(n_segments))
-        (
-            docs.drop("tokens").observe(obs, *exprs)
-            .write.mode("overwrite")
-            .partitionBy("segment_id")
-            .parquet(paths.docs)
-        )
+        write_docs(docs.drop("tokens").observe(obs, *exprs), paths.docs)
         vals = obs.get
         n_docs = int(vals["n_docs"] or 0)
         _t = _trace("docs write", _t)

@@ -90,7 +90,7 @@ def _purge_docs_and_stats(spark, paths, purge_df, srcs) -> None:
     segment when a crash landed between the src delete and the rewrite,
     because the replay skipped missing src dirs)."""
 
-    from .docs import SEG_STRIDE
+    from .docs import SEG_STRIDE, write_docs
 
     # the purge removes vocabulary/docs — the optional dictionary and
     # tier-index sidecars go stale the moment docs physically leave, so
@@ -120,7 +120,7 @@ def _purge_docs_and_stats(spark, paths, purge_df, srcs) -> None:
         if survivors is None:
             _delete_path(spark, src_dir)
         else:
-            survivors.write.mode("overwrite").parquet(src_dir)
+            write_docs(survivors, src_dir, partitioned=False)
         _delete_staged(spark, staging)
 
     for seg in doc_segs:
@@ -135,7 +135,7 @@ def _purge_docs_and_stats(spark, paths, purge_df, srcs) -> None:
         if remaining is None:
             continue
         _delete_staged(spark, staging)
-        remaining.join(purge_df, "doc_id", "left_anti").write.mode("overwrite").parquet(staging)
+        write_docs(remaining.join(purge_df, "doc_id", "left_anti"), staging, partitioned=False)
         _promote(staging, src_dir)
     # stats over the remaining corpus (a purge rewrites norms anyway,
     # so this one full agg is already proportional to work done; the

@@ -24,6 +24,9 @@ Scale notes (what changes at 10^12 docs, nothing structural):
     repeated/zipfian query terms hit memory, cold terms cost one
     columnar read. Replicas shard by index or by segment range when
     one box can't hold the hot set.
+  * result urls/snippets cost one docs read that decodes only the
+    ~64 KB row groups holding the ≤k ids, pruned on each partition's
+    footer statistics (cached per segment, byte-budgeted).
   * results are (doc_id, score) — identical, by test, to wand_topk;
     phrase results identical to phrase_topk (positional indexes).
 
@@ -41,6 +44,7 @@ from collections import OrderedDict
 import numpy as np
 
 from .functions.bm25 import B, K1, idf as idf_fn
+from .functions.codec import SEG_STRIDE
 from .functions.tokenize import tokenize_query
 from .sources.catalog import IndexPaths
 
@@ -74,6 +78,30 @@ _DEAD_CACHE_BUDGET = 256 * 1024 * 1024
 # dominates dense-term (BM25/phrase) queries once frames are hot
 # (measured: the stop-word-phrase p50 is ~100% decode+kernel, 0% fetch).
 _DECODE_BUDGET = 256 * 1024 * 1024
+
+
+# Byte budget for the per-segment docs-footer cache (_docs_segment: the
+# open docs files plus their per-row-group doc_id min/max, the pruning
+# input of _doc_fields). LRU eviction; one segment is the unit.
+_DOCS_META_BUDGET = 64 * 1024 * 1024
+
+_I64 = np.iinfo(np.int64)
+
+
+def format_snippet(text: str | None, terms: list[str], width: int = 160) -> str:
+    """A ~`width`-char window of `text` centered on the earliest
+    occurrence of any query term (case-insensitive), with "…" marking
+    each cut edge — the reference's context-formatter surface
+    (src/context-formatter.ts). No term found → the text head
+    (phrase-normalized forms may not substring-match); null or empty
+    text → ""."""
+    if not text:
+        return ""
+    low = text.lower()
+    hits = [p for p in (low.find(t.lower()) for t in terms if t) if p >= 0]
+    start = max(0, (min(hits) if hits else 0) - width // 2)
+    end = min(len(text), start + width)
+    return ("…" if start > 0 else "") + text[start:end].strip() + ("…" if end < len(text) else "")
 
 
 def _decoded_nbytes(value) -> int:
@@ -189,9 +217,6 @@ class IndexReader:
         self._last_shared: dict = {}  # most-recent counters, any thread
         self._epoch = 0  # bumped by refresh(): invalidates ALL threads'
         #                  thread-local last_stats, not just the caller's
-        self.totals: dict = {"queries": 0, "segments_touched": 0,
-                             "blocks_considered": 0, "blocks_decoded": 0,
-                             "terms_cold": 0}
         self.refresh()
 
     @property
@@ -300,7 +325,10 @@ class IndexReader:
         # (no postings/terms/docs dirs) — serve it as empty, not a crash
         self._postings = self._dataset_or_none(self.paths.postings)
         self._terms = self._dataset_or_none(self.paths.terms)
-        self._docs = self._dataset_or_none(self.paths.docs)
+        # docs partitions are listed and their footers parsed lazily, on
+        # a segment's first fetch (_docs_segment) — nothing here
+        self._docs_meta: OrderedDict[int, tuple] = OrderedDict()
+        self._docs_meta_bytes = 0
         self._tier_specs_cache = None
         self._tier_ds_cache.clear()
         self._tier_over_cap.clear()
@@ -319,7 +347,7 @@ class IndexReader:
         self.totals = {"queries": 0, "segments_touched": 0,
                        "blocks_considered": 0, "blocks_decoded": 0,
                        "terms_cold": 0, "decoded_hits": 0,
-                       "tier_stream_intersects": 0}
+                       "tier_stream_intersects": 0, "docs_row_groups": 0}
 
     @staticmethod
     def _dataset_or_none(path: str):
@@ -532,52 +560,146 @@ class IndexReader:
         return self._fetch_blocks(self._blocks_lru, _POSTING_COLS + ["segment_id"], terms,
                                   stats=stats)
 
-    def urls(self, doc_ids: list[int]) -> dict[int, str]:
-        """doc_id → url via row-group-pruned docs reads (docs are
-        sorted by doc_id within each segment partition)."""
+    def _docs_segment(self, seg: int) -> tuple:
+        """One docs partition's row-group index: (open ParquetFiles,
+        per-row-group doc_id min, max and running max of max, file and
+        row-group position, footprint bytes), ordered by min. Listed
+        and footer-parsed on the segment's first fetch after refresh(),
+        then cached — no fetch re-parses a footer. I/O runs outside the lock; the install
+        is epoch-checked (a pre-refresh listing is never cached). A row
+        group without doc_id statistics spans every id, so its file
+        falls back to full reads; a missing partition is empty."""
         import pyarrow.dataset as ds
+        import pyarrow.parquet as pq
 
-        if not doc_ids or self._docs is None:
-            return {}
-        tbl = self._docs.to_table(
-            filter=ds.field("doc_id").isin(sorted(doc_ids)), columns=["doc_id", "url"]
-        )
-        d = tbl.to_pydict()
-        return dict(zip(d["doc_id"], d["url"]))
+        with self._lock:
+            hit = self._docs_meta.get(seg)
+            if hit is not None:
+                self._docs_meta.move_to_end(seg)
+                return hit
+            epoch = self._epoch
+        files, lo, hi, fpos, rpos, nbytes = [], [], [], [], [], 0
+        try:
+            part = ds.dataset(f"{self.paths.docs}/segment_id={seg}", format="parquet")
+            paths, fs = part.files, part.filesystem
+        except FileNotFoundError:
+            paths, fs = [], None
+        for path in paths:
+            pf = pq.ParquetFile(path, filesystem=fs)
+            md = pf.metadata
+            names = md.schema.names
+            col = names.index("doc_id") if "doc_id" in names else -1
+            for r in range(md.num_row_groups):
+                st = md.row_group(r).column(col).statistics if col >= 0 else None
+                has = st is not None and st.has_min_max
+                lo.append(st.min if has else _I64.min)
+                hi.append(st.max if has else _I64.max)
+                fpos.append(len(files))
+                rpos.append(r)
+            files.append(pf)
+            nbytes += md.serialized_size
+        order = np.argsort(np.asarray(lo, dtype=np.int64), kind="stable")
+        lo, hi, fpos, rpos = (np.asarray(a, dtype=np.int64)[order] for a in (lo, hi, fpos, rpos))
+        hi_run = np.maximum.accumulate(hi)
+        nbytes += sum(a.nbytes for a in (lo, hi, hi_run, fpos, rpos))
+        entry = (files, lo, hi, hi_run, fpos, rpos, nbytes)
+        with self._lock:
+            if self._epoch == epoch and seg not in self._docs_meta:
+                self._docs_meta[seg] = entry
+                self._docs_meta_bytes += nbytes
+                while self._docs_meta_bytes > _DOCS_META_BUDGET and len(self._docs_meta) > 1:
+                    _, old = self._docs_meta.popitem(last=False)
+                    self._docs_meta_bytes -= old[-1]
+        return entry
+
+    def _read_doc_fields(self, ids: np.ndarray, columns: list[str]) -> tuple[dict, int]:
+        """One attempt of _doc_fields → (column → {doc_id: value},
+        row groups read)."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        out: dict[str, dict] = {c: {} for c in columns}
+        n_rg = 0
+        segs = ids // SEG_STRIDE
+        for seg in np.unique(segs):
+            want = ids[segs == seg]
+            files, lo, hi, hi_run, fpos, rpos, _ = self._docs_segment(int(seg))
+            # candidates of id x: row groups [a, b) — min ≤ x (b) and no
+            # earlier group's max reaches x (a); keep those with max ≥ x.
+            # Disjoint ascending groups (every writer's layout) give b - a ≤ 1.
+            a = np.searchsorted(hi_run, want, "left")
+            b = np.searchsorted(lo, want, "right")
+            pick = sorted({j for x, i, e in zip(want, a, b) for j in range(i, e) if hi[j] >= x})
+            by_file: dict[int, list[int]] = {}
+            for j in pick:
+                by_file.setdefault(int(fpos[j]), []).append(int(rpos[j]))
+            for f, rgs in by_file.items():
+                tbl = files[f].read_row_groups(sorted(rgs), columns=["doc_id", *columns],
+                                               use_threads=False)
+                tbl = tbl.filter(pc.is_in(tbl["doc_id"], value_set=pa.array(want)))
+                d = tbl.to_pydict()
+                for c in columns:
+                    out[c].update(zip(d["doc_id"], d[c]))
+                n_rg += len(rgs)
+        return out, n_rg
+
+    def _doc_fields(self, doc_ids: "list[int]", columns: list[str],
+                    stats: dict | None = None) -> dict[str, dict]:
+        """column → {doc_id: value} for `doc_ids` (absent ids have no
+        entry) from ONE docs read: each id routes to its partition by
+        doc_id // SEG_STRIDE (docs rows never move in a merge), the
+        cached per-row-group doc_id statistics pick the row groups that
+        hold the ids, and each file decodes just those
+        (one read_row_groups call per file). Self-heals once across an
+        external rewrite (a purge replacing a partition's files).
+        Counts docs_row_groups into `stats` and the reader totals."""
+        ids = np.unique(np.asarray(list(doc_ids), dtype=np.int64))
+        if not len(ids):
+            return {c: {} for c in columns}
+        out, n_rg = self._self_heal(lambda: self._read_doc_fields(ids, columns))
+        with self._lock:
+            self.totals["docs_row_groups"] += n_rg
+        if stats is not None:
+            stats["docs_row_groups"] = stats.get("docs_row_groups", 0) + n_rg
+        return out
+
+    def urls(self, doc_ids: list[int]) -> dict[int, str]:
+        """doc_id → url (one _doc_fields read)."""
+        return self._doc_fields(doc_ids, ["url"])["url"]
 
     def snippets(self, doc_ids: list[int], terms: list[str],
                  width: int = 160) -> dict[int, str]:
-        """doc_id → context snippet: a ~`width`-char window of the doc
-        text centered on the first query-term occurrence (the
-        reference's context-formatter surface, src/context-formatter.ts
-        — matched-line context around each hit). One row-group-pruned
-        read for the ≤k result docs; O(k) driver-side string work."""
-        import pyarrow.dataset as ds
+        """doc_id → context snippet (format_snippet) of each doc's text,
+        from one _doc_fields read."""
+        texts = self._doc_fields(doc_ids, ["text"])["text"]
+        return {d: format_snippet(t, terms, width) for d, t in texts.items()}
 
-        if not doc_ids or self._docs is None:
-            return {}
-        tbl = self._docs.to_table(
-            filter=ds.field("doc_id").isin(sorted(doc_ids)), columns=["doc_id", "text"]
-        )
-        d = tbl.to_pydict()
-        needles = [t.lower() for t in terms if t]
-        out: dict[int, str] = {}
-        for doc_id, text in zip(d["doc_id"], d["text"]):
-            low = (text or "").lower()
-            pos = -1
-            for t in needles:
-                p = low.find(t)
-                if p >= 0 and (pos < 0 or p < pos):
-                    pos = p
-            if pos < 0:
-                pos = 0  # phrase-normalized forms may not substring-match
-            start = max(0, pos - width // 2)
-            end = min(len(text), start + width)
-            snip = text[start:end].strip()
-            out[int(doc_id)] = (
-                ("…" if start > 0 else "") + snip + ("…" if end < len(text) else "")
-            )
-        return out
+    def attach_docs(self, rows: list[dict], query: str, with_urls: bool = True,
+                    with_snippets: bool = False, snippet_width: int = 160) -> list[dict]:
+        """Add "url" and/or "snippet" to each result row (keyed by
+        "doc_id") from ONE _doc_fields read — the decoration every
+        search surface shares (search, MCP tiered, sessions'
+        boosted_search). A doc with no docs row gets None. Records
+        docs_row_groups and docs_ms (read + formatting) in this
+        thread's last_stats."""
+        columns = [c for c, on in (("url", with_urls), ("text", with_snippets)) if on]
+        if not columns or not rows:
+            return rows
+        t0 = time.time()
+        dstats: dict = {}
+        got = self._doc_fields([r["doc_id"] for r in rows], columns, dstats)
+        urls, texts = got.get("url", {}), got.get("text", {})
+        terms = tokenize_query(query) if with_snippets else []
+        for r in rows:
+            d = r["doc_id"]
+            if with_urls:
+                r["url"] = urls.get(d)
+            if with_snippets:
+                r["snippet"] = format_snippet(texts[d], terms, snippet_width) if d in texts else None
+        dstats["docs_ms"] = round((time.time() - t0) * 1e3, 3)
+        with self._lock:
+            self.last_stats.update(dstats)
+        return rows
 
     # ---------------------------------------------------------- queries
     def topk(self, query: str, k: int = 10,
@@ -1361,18 +1483,8 @@ class IndexReader:
         else:
             hits = self.topk(query, k, budget_ms=budget_ms)
             key = "score"
-        ids = [d for d, _ in hits]
-        url_map = self.urls(ids) if with_urls else {}
-        snip_map = (
-            self.snippets(ids, tokenize_query(query), width=snippet_width)
-            if with_snippets else {}
-        )
-        return [
-            {"rank": i + 1, "doc_id": d, key: s,
-             **({"url": url_map.get(d)} if with_urls else {}),
-             **({"snippet": snip_map.get(d)} if with_snippets else {})}
-            for i, (d, s) in enumerate(hits)
-        ]
+        rows = [{"rank": i + 1, "doc_id": d, key: s} for i, (d, s) in enumerate(hits)]
+        return self.attach_docs(rows, query, with_urls, with_snippets, snippet_width)
 
     def prewarm(self, queries: "list[str]", k: int = 10,
                 tiered: bool = False) -> int:

@@ -348,16 +348,6 @@ def boosted_search(reader, store: SessionStore, session_id: str, query: str,
                 merged[doc] = {"doc_id": doc, key: round(scores[doc] + bump, 4),
                                "boosted": True}
     rows = sorted(merged.values(), key=lambda r: (-float(r[key]), r["doc_id"]))[:k]
-    final_ids = [r["doc_id"] for r in rows]
-    url_map = reader.urls(final_ids) if with_urls and final_ids else {}
-    snip_map = (
-        reader.snippets(final_ids, tokenize_query(query), width=snippet_width)
-        if with_snippets and final_ids else {}
-    )
     for i, r in enumerate(rows):
         r["rank"] = i + 1
-        if with_urls:
-            r["url"] = url_map.get(r["doc_id"])
-        if with_snippets:
-            r["snippet"] = snip_map.get(r["doc_id"])
-    return rows
+    return reader.attach_docs(rows, query, with_urls, with_snippets, snippet_width)

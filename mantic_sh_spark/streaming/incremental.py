@@ -28,7 +28,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.docs import build_docs, doc_stats
+from ..operators.docs import build_docs, doc_stats, write_docs
 from ..operators.index_build import build_postings_for_segments
 from ..sources.catalog import IndexPaths, append_manifest
 
@@ -103,12 +103,7 @@ def extend_index(
     new_docs = build_docs(new_pages, n_segments=n_new_segments, segment_offset=seg_base)
     # build_docs output is already segment-partitioned and doc_id-sorted
     # within segments (window order) — no second text shuffle needed
-    (
-        new_docs.drop("tokens")
-        .write.mode("append")
-        .partitionBy("segment_id")
-        .parquet(paths.docs)
-    )
+    write_docs(new_docs.drop("tokens"), paths.docs, mode="append")
     all_docs = spark.read.parquet(paths.docs)
     # no repartition: docs are hive-partitioned by segment already, so
     # scan tasks are segment-aligned and the dynamic-partition append

@@ -340,14 +340,18 @@ def test_mcp_round_trip(spark, small_corpus):
 def test_reader_concurrent_queries_identical(spark, small_corpus):
     """Task 7 (serve concurrency): N threads hammering one reader must
     each get value-identical results to a fresh single-threaded reader,
-    with no torn refresh (a refresh runs mid-flight)."""
+    with no torn refresh (a refresh runs mid-flight). The threads also
+    fetch urls and snippets, sharing the reader's open docs files."""
     from concurrent.futures import ThreadPoolExecutor
 
     from mantic_sh_spark.serve import IndexReader
 
     idx = small_corpus["index_dir"]
     queries = [q for _, q in gen_queries(small_corpus["cfg"], n_queries=16)]
-    want = {q: IndexReader(idx).topk(q, 10) for q in set(queries)}
+    single = IndexReader(idx)
+    want = {q: single.topk(q, 10) for q in set(queries)}
+    want_rows = {q: single.search(q, 10, with_urls=True, with_snippets=True)
+                 for q in set(queries)}
 
     reader = IndexReader(idx)
 
@@ -356,14 +360,16 @@ def test_reader_concurrent_queries_identical(spark, small_corpus):
         for j, q in enumerate(queries):
             if i == 0 and j == 8:
                 reader.refresh()  # single-writer refresh mid-traffic
-            out.append((q, reader.topk(q, 10)))
+            out.append((q, reader.topk(q, 10),
+                        reader.search(q, 10, with_urls=True, with_snippets=True)))
         return out
 
     with ThreadPoolExecutor(6) as pool:
         results = list(pool.map(hammer, range(6)))
     for thread_out in results:
-        for q, got in thread_out:
+        for q, got, rows in thread_out:
             assert got == want[q], q
+            assert rows == want_rows[q], q
 
 
 def test_read_amplification_counters(spark, small_corpus):
@@ -495,7 +501,10 @@ def test_stale_reader_self_heals_across_external_merge(spark, tmp_path):
     the next cold read raises. topk must self-heal — refresh() + one
     retry — and answer from the post-merge index instead of propagating
     the I/O error (refresh-contract automation for serving
-    deployments)."""
+    deployments). Its docs fetches (urls + snippets) follow: a purged
+    doc tombstoned before the merge makes the merge rewrite docs
+    partitions the stale reader had already opened."""
+    from mantic_sh_spark.operators.delete import delete_docs
     from mantic_sh_spark.operators.index_build import build_index
     from mantic_sh_spark.operators.merge import merge_segments
     from mantic_sh_spark.sources.synth import SynthConfig, gen_pages
@@ -505,15 +514,21 @@ def test_stale_reader_self_heals_across_external_merge(spark, tmp_path):
     idx = str(tmp_path / "idx")
     build_index(spark, pages, idx, n_segments=3)
 
+    victim = IndexReader(idx).topk("w1x", k=1)[0][0]
+    delete_docs(spark, idx, doc_ids=[victim])
     stale = IndexReader(idx)  # holds pre-merge dataset handles
     epoch0 = stale._epoch
+    assert victim in stale.snippets([victim], ["w1x"])  # opens its docs partition
     # the "other process": retire ALL source segments under the reader
     merge_segments(spark, idx, [0, 1, 2], dst_segment=9, compact=True)
 
     fresh = IndexReader(idx)
     for q in ("w1x", "w1x w2x", "w0x w3x"):
         assert stale.topk(q, k=8) == fresh.topk(q, k=8), q
+        assert (stale.search(q, k=8, with_urls=True, with_snippets=True)
+                == fresh.search(q, k=8, with_urls=True, with_snippets=True)), q
     assert stale._epoch > epoch0, "self-heal must have refreshed the reader"
+    assert stale.snippets([victim], ["w1x"]) == {}, "purged doc served from a stale file"
     assert sorted(
         {int(s) for pdf in stale._blocks(["w1x"]).values() for s in pdf["segment_id"]}
     ) == [9]
@@ -895,3 +910,165 @@ def test_recent_queries_tie_order_and_corrupt_fragment(tmp_path, monkeypatch):
     with open(f"{log_dir}/log-9999999999999999-0.parquet", "wb") as f:
         f.write(b"PAR1 not really a parquet file")
     assert recent_queries(log_dir) == ["newer-tie", "older-tie"]
+
+
+def test_format_snippet():
+    """Spark-free: the snippet window around the earliest query-term
+    hit, "…" on each cut edge, "" for a null text."""
+    from mantic_sh_spark.serve import format_snippet
+
+    assert format_snippet(None, ["w1"]) == ""
+    assert format_snippet("", ["w1"]) == ""
+    text = " ".join(f"w{i}" for i in range(100))
+    # no match → the text head, cut with a trailing ellipsis only
+    assert format_snippet(text, ["zz"], width=20) == text[:20].strip() + "…"
+    # a match at offset 0 (case-insensitive) → no leading ellipsis
+    assert format_snippet(text, ["W0"], width=20) == text[:20].strip() + "…"
+    # a match at the end → leading ellipsis only
+    p = text.find("w99")
+    assert format_snippet(text, ["w99"], width=20) == "…" + text[p - 10:].strip()
+    # a match in the middle → both ellipses, centered on the EARLIEST hit
+    p = text.find("w50")
+    assert format_snippet(text, ["w60", "w50"], width=20) == "…" + text[p - 10:p + 10].strip() + "…"
+    # nothing cut → no ellipsis
+    assert format_snippet("Short Text", ["text"], width=20) == "Short Text"
+
+
+def _check_docs_fetch(reader, idx: str, extra_ids: list[int]) -> None:
+    """Layout + parity of the reader's docs fetch against a brute-force
+    read of the docs dir: every docs file over 300 rows has several row
+    groups; urls / snippets / search(with_urls, with_snippets) equal the
+    brute-force rows for the first and last id of several row groups of
+    every file (so several segments), an absent id, an id in a missing
+    segment and `extra_ids`; a k-id fetch reads at most k row groups."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from mantic_sh_spark.functions.codec import SEG_STRIDE
+    from mantic_sh_spark.functions.tokenize import tokenize_query
+    from mantic_sh_spark.serve import format_snippet
+
+    t = pq.read_table(f"{idx}/docs", columns=["doc_id", "url", "text"]).to_pydict()
+    url, text = dict(zip(t["doc_id"], t["url"])), dict(zip(t["doc_id"], t["text"]))
+    files = sorted(glob.glob(f"{idx}/docs/segment_id=*/*.parquet"))
+    assert len({f.rsplit("/", 2)[-2] for f in files}) >= 2
+    probe = set()
+    for f in files:
+        md = pq.ParquetFile(f).metadata
+        if md.num_rows > 300:
+            assert md.num_row_groups > 1, f
+        for g in sorted({0, md.num_row_groups // 2, md.num_row_groups - 1}):
+            ids = pq.ParquetFile(f).read_row_group(g, columns=["doc_id"])["doc_id"].to_pylist()
+            probe |= {ids[0], ids[-1]}
+    ids = sorted(probe) + [max(url) + 1, 77 * SEG_STRIDE + 5] + list(extra_ids)
+    terms = ["w1x", "w5x"]
+
+    def fetch(doc_ids):
+        before = reader.counters()["total"]["docs_row_groups"]
+        got = reader.urls(doc_ids)
+        return got, reader.counters()["total"]["docs_row_groups"] - before
+
+    for d in ids:  # alone, each id must find its own row group
+        got, n_rg = fetch([d])
+        assert got == ({d: url[d]} if d in url else {}) and n_rg <= 1, d
+    got, n_rg = fetch(ids)
+    assert got == {d: url[d] for d in ids if d in url} and 0 < n_rg <= len(ids)
+    assert reader.snippets(ids, terms) == {
+        d: format_snippet(text[d], terms) for d in ids if d in url}
+    for q in ("w1x w5x", "w2x", "w3x w7x w11x"):
+        rows = reader.search(q, k=10, with_urls=True, with_snippets=True)
+        assert rows, q
+        st = reader.last_stats
+        assert 1 <= st["docs_row_groups"] <= len(rows) and st["docs_ms"] >= 0
+        for r in rows:
+            assert r["url"] == url[r["doc_id"]]
+            assert r["snippet"] == format_snippet(text[r["doc_id"]], tokenize_query(q))
+
+
+def test_docs_fetch_matches_brute_force_read(spark, tmp_path):
+    """The reader's one-read docs fetch (row groups picked by cached
+    footer statistics) against a brute-force docs read, on the layouts
+    every docs writer leaves: the build, an upsert's appended segment,
+    and a purge merge's rewritten partitions (seen through refresh())."""
+    from pyspark.sql import functions as F
+
+    from mantic_sh_spark.operators.delete import delete_docs
+    from mantic_sh_spark.operators.index_build import build_index
+    from mantic_sh_spark.operators.merge import merge_segments
+    from mantic_sh_spark.sources.synth import gen_pages
+    from mantic_sh_spark.streaming.incremental import upsert_pages
+
+    cfg = SynthConfig(n_docs=1300, vocab_size=600, seed=31)
+    pages = gen_pages(spark, cfg, partitions=4)
+    idx = str(tmp_path / "idx")
+    build_index(spark, pages, idx, n_segments=2)
+    reader = IndexReader(idx)
+    victim = reader.topk("w2x", k=1)[0][0]
+    delete_docs(spark, idx, doc_ids=[victim])
+    reader.refresh()
+    _check_docs_fetch(reader, idx, [victim])  # tombstoned, still a docs row
+
+    mod_urls = [r.url for r in pages.select("url").orderBy("url").limit(40).collect()]
+    modified = pages.filter(F.col("url").isin(mod_urls)).withColumn(
+        "text", F.concat(F.col("text"), F.lit(" zzmodified")))
+    added = gen_pages(spark, SynthConfig(n_docs=400, vocab_size=600, seed=32),
+                      partitions=2).withColumn(
+        "url", F.regexp_replace("url", "example/", "example/v2/"))
+    res = upsert_pages(spark, idx, modified.unionByName(added), n_new_segments=1)
+    assert res["modified"] == 40 and res["added"] == 400
+    reader.refresh()
+    _check_docs_fetch(reader, idx, [victim])
+
+    segs = sorted(r.segment_id for r in
+                  spark.read.parquet(f"{idx}/postings").select("segment_id").distinct().collect())
+    merge_segments(spark, idx, segs, dst_segment=max(segs) + 1, compact=True, purge=True)
+    reader.refresh()
+    assert reader.urls([victim]) == {}
+    _check_docs_fetch(reader, idx, [victim])
+
+
+def test_doc_fields_any_layout(tmp_path):
+    """Spark-free: the docs fetch stays exact on layouts no writer
+    produces today — a file without doc_id statistics (read whole) and
+    two files of one partition with interleaved id ranges."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mantic_sh_spark.functions.codec import SEG_STRIDE
+
+    root = tmp_path / "idx"
+    (root / "collection_stats").mkdir(parents=True)
+    pq.write_table(pa.table({"n_docs": [60], "avgdl": [1.0], "sum_dl": [60]}),
+                   root / "collection_stats" / "part-0.parquet")
+
+    def write(seg, name, ids, **kw):
+        d = root / "docs" / f"segment_id={seg}"
+        d.mkdir(parents=True, exist_ok=True)
+        ids = [seg * SEG_STRIDE + i for i in ids]
+        pq.write_table(pa.table({"doc_id": pa.array(ids, pa.int64()),
+                                 "url": [f"u{i}" for i in ids],
+                                 "text": [f"t{i}" for i in ids]}),
+                       d / name, row_group_size=5, **kw)
+        return ids
+
+    ids = write(0, "a.parquet", range(20))
+    ids += write(1, "a.parquet", range(20), write_statistics=False)
+    ids += write(2, "a.parquet", range(0, 40, 2)) + write(2, "b.parquet", range(1, 40, 2))
+    reader = IndexReader(str(root))
+    want = {d: f"u{d}" for d in ids}
+
+    def fetch(doc_ids):
+        before = reader.counters()["total"]["docs_row_groups"]
+        got = reader.urls(doc_ids)
+        return got, reader.counters()["total"]["docs_row_groups"] - before
+
+    assert fetch([7]) == ({7: "u7"}, 1)
+    # no statistics: every row group of the file is read
+    assert fetch([SEG_STRIDE + 7]) == ({SEG_STRIDE + 7: f"u{SEG_STRIDE + 7}"}, 4)
+    # interleaved files: one id's range is covered by a group of each file
+    d = 2 * SEG_STRIDE + 13
+    assert fetch([d]) == ({d: f"u{d}"}, 2)
+    assert fetch(ids + [20, 3 * SEG_STRIDE])[0] == want
+    texts = reader._doc_fields(ids, ["url", "text"])
+    assert texts == {"url": want, "text": {d: f"t{d}" for d in ids}}
