@@ -317,14 +317,13 @@ def encode_table(tbl, avgdl: float, k1: float, b: float, block_size: int = BLOCK
     instruction, and the term→string mapping lives in the (vocabulary-
     sized) terms directory instead of on every posting row.
 
-    Input rows are sorted by (tid, doc_id) — segment and salt are
+    Input rows are pre-aggregated postings — one row per (term, doc)
+    with an explicit `tf` column (and, with positions, an int-array
+    `positions` column) — sorted by (tid, doc_id). Segment and salt are
     derived vectorized from doc_id (segment = id div SEG_STRIDE, salt =
     rank-in-segment div chunk_size), so they never travel as shuffle
     columns; the (tid, doc_id) order IS the (tid, segment, salt,
-    doc_id) order because both are monotone in doc_id. With a `tf`
-    column, rows are pre-aggregated postings (the doc-local combine
-    path); without it, rows are occurrences and tf falls out of a
-    run-length pass."""
+    doc_id) order because both are monotone in doc_id."""
     import numpy as np
     import pyarrow as pa
 
@@ -340,23 +339,9 @@ def encode_table(tbl, avgdl: float, k1: float, b: float, block_size: int = BLOCK
     gchanged[1:] = tid[1:] != tid[:-1]
     gchanged[1:] |= (seg[1:] != seg[:-1]) | (salt[1:] != salt[:-1])
     grows = np.flatnonzero(gchanged)
-    if "tf" in tbl.schema.names:
-        # pre-aggregated input: one row per (term, doc) posting with an
-        # explicit tf column (the doc-local combine path) — no
-        # run-length pass, posting index space == row index space
-        pstarts = np.arange(n, dtype=np.int64)
-        tf = tbl.column("tf").to_numpy().astype(np.int64)
-        gstarts = grows
-    else:
-        # occurrence input: posting boundary = group change OR doc
-        # change; tf falls out of the run lengths
-        pchanged = gchanged.copy()
-        pchanged[1:] |= doc[1:] != doc[:-1]
-        pstarts = np.flatnonzero(pchanged)
-        tf = np.diff(np.append(pstarts, n))
-        # group starts re-expressed in posting index space
-        gstarts = np.searchsorted(pstarts, grows)
-    enc = encode_groups(gstarts, doc[pstarts], tf, dl[pstarts], avgdl, k1, b, block_size)
+    # one row per posting: posting index space == row index space
+    tf = tbl.column("tf").to_numpy().astype(np.int64)
+    enc = encode_groups(grows, doc, tf, dl, avgdl, k1, b, block_size)
     gi = enc.pop("group_idx")
     bs_p = enc.pop("p_start")
     be_p = enc.pop("p_end")
@@ -406,42 +391,26 @@ def encode_table(tbl, avgdl: float, k1: float, b: float, block_size: int = BLOCK
     if with_positions:
         # per-posting position deltas (first value of each posting run
         # is the absolute position), one varint buffer for the whole
-        # batch sliced by each block's flat-position bounds
-        if "tf" in tbl.schema.names:
-            # pre-aggregated rows: positions arrive as an int-ARRAY
-            # column per posting — flatten keeps per-row order, and
-            # posting j owns flat[off[j]:off[j+1]] with off = cumsum(tf)
-            parr = tbl.column("positions").combine_chunks()
-            if isinstance(parr, pa.ChunkedArray):
-                parr = parr.chunk(0) if parr.num_chunks == 1 else pa.concat_arrays(parr.chunks)
-            flat = parr.flatten().to_numpy(zero_copy_only=False).astype(np.int64)
-            off = np.zeros(len(tf) + 1, dtype=np.int64)
-            np.cumsum(tf, out=off[1:])
-            pgaps = np.empty(len(flat), dtype=np.int64)
-            pgaps[0] = flat[0]
-            np.subtract(flat[1:], flat[:-1], out=pgaps[1:])
-            pgaps[off[:-1]] = flat[off[:-1]]
-            nbytes = varint_nbytes(pgaps)
-            offsets = np.zeros(len(flat) + 1, dtype=np.int64)
-            np.cumsum(nbytes, out=offsets[1:])
-            buf = varint_encode(pgaps, nbytes)
-            rs = off[bs_p]
-            re = off[be_p]
-        else:
-            # occurrence rows: one `pos` per raw row; posting runs are
-            # the pstarts segmentation
-            pos = tbl.column("pos").to_numpy()
-            pgaps = np.empty(n, dtype=np.int64)
-            pgaps[0] = pos[0]
-            np.subtract(pos[1:], pos[:-1], out=pgaps[1:])
-            pgaps[pstarts] = pos[pstarts]
-            nbytes = varint_nbytes(pgaps)
-            offsets = np.zeros(n + 1, dtype=np.int64)
-            np.cumsum(nbytes, out=offsets[1:])
-            buf = varint_encode(pgaps, nbytes)
-            pstarts_ext = np.append(pstarts, n)
-            rs = pstarts_ext[bs_p]
-            re = pstarts_ext[be_p]
+        # batch sliced by each block's flat-position bounds. Positions
+        # arrive as an int-ARRAY column per posting — flatten keeps
+        # per-row order, and posting j owns flat[off[j]:off[j+1]] with
+        # off = cumsum(tf)
+        parr = tbl.column("positions").combine_chunks()
+        if isinstance(parr, pa.ChunkedArray):
+            parr = parr.chunk(0) if parr.num_chunks == 1 else pa.concat_arrays(parr.chunks)
+        flat = parr.flatten().to_numpy(zero_copy_only=False).astype(np.int64)
+        off = np.zeros(len(tf) + 1, dtype=np.int64)
+        np.cumsum(tf, out=off[1:])
+        pgaps = np.empty(len(flat), dtype=np.int64)
+        pgaps[0] = flat[0]
+        np.subtract(flat[1:], flat[:-1], out=pgaps[1:])
+        pgaps[off[:-1]] = flat[off[:-1]]
+        nbytes = varint_nbytes(pgaps)
+        offsets = np.zeros(len(flat) + 1, dtype=np.int64)
+        np.cumsum(nbytes, out=offsets[1:])
+        buf = varint_encode(pgaps, nbytes)
+        rs = off[bs_p]
+        re = off[be_p]
         nbp = len(rs)
         pend = int(offsets[re[-1]]) if nbp else 0
         if pend >= 2**31:  # same int32-offset wraparound guard as _bin

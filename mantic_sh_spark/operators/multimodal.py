@@ -1,16 +1,11 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata,
 decode / feature-extract / frame-sample as Arrow-batched pandas UDFs.
 
-Decode support, honestly tiered:
-  * REAL decoders for the uncompressed standard formats — BMP images
-    (pure-numpy 24bpp parser: dims, pixels, mean color, strided
-    resize) and PCM WAV audio (stdlib `wave`: sample rate, duration,
-    RMS, decimated resample). These run end-to-end in this container.
-  * COMPRESSED formats (JPEG/PNG/MP4) raise NotImplementedError with
-    the documented swap point — their codec libs (PIL/ffmpeg) are not
-    installed here; dropping them in changes only the `_decode_*`
-    dispatch bodies, never the Spark-side schema/batch plumbing.
-  * a FAKE deterministic format remains for plumbing tests.
+Decode support: a FAKE deterministic format for plumbing tests; every
+real format (JPEG/PNG/MP4, ...) raises NotImplementedError with the
+documented swap point — its codec libs (PIL/ffmpeg) are not installed
+here, and dropping them in changes only the `_decode_dims` dispatch
+body, never the Spark-side schema/batch plumbing.
 
 Reference analog: the binary-artifact handling of the reference
 (ONNX model / WASM downloads, src/semantic-scorer.ts:58-101 — S10):
@@ -20,7 +15,6 @@ payload bytes are opaque, metadata drives the pipeline.
 from __future__ import annotations
 
 import hashlib
-import struct
 from collections.abc import Iterator
 
 import numpy as np
@@ -35,88 +29,6 @@ FAKE_MAGIC = b"FAKE"
 
 # formats whose decode needs codec libs absent from this container
 COMPRESSED_FORMATS = {"image/jpeg", "image/png", "video/mp4"}
-
-
-# ------------------------------------------------------------------ BMP
-def make_bmp(width: int, height: int, seed: int = 0) -> bytes:
-    """Deterministic 24bpp uncompressed BMP (BITMAPINFOHEADER,
-    bottom-up rows, 4-byte row padding) — a real, spec-conformant
-    image file built with numpy; test vector and synth-media source."""
-    rng = np.random.default_rng([seed, width, height])
-    px = rng.integers(0, 256, size=(height, width, 3), dtype=np.uint8)  # BGR
-    row_bytes = width * 3
-    pad = (-row_bytes) % 4
-    rows = np.zeros((height, row_bytes + pad), dtype=np.uint8)
-    rows[:, :row_bytes] = px.reshape(height, row_bytes)
-    data = rows[::-1].tobytes()  # bottom-up
-    off = 14 + 40
-    header = struct.pack("<2sIHHI", b"BM", off + len(data), 0, 0, off)
-    info = struct.pack("<IiiHHIIiiII", 40, width, height, 1, 24, 0, len(data),
-                       2835, 2835, 0, 0)
-    return header + info + data
-
-
-def decode_bmp(payload: bytes) -> tuple[int, int, np.ndarray]:
-    """(width, height, pixels[h, w, 3] RGB uint8) from a 24bpp
-    uncompressed BMP — pure numpy, no codec libs."""
-    if payload[:2] != b"BM":
-        raise ValueError("not a BMP payload")
-    off = struct.unpack_from("<I", payload, 10)[0]
-    width, height = struct.unpack_from("<ii", payload, 18)
-    bpp = struct.unpack_from("<H", payload, 28)[0]
-    comp = struct.unpack_from("<I", payload, 30)[0]
-    if bpp != 24 or comp != 0:
-        raise NotImplementedError(f"BMP variant bpp={bpp} compression={comp} unsupported")
-    flip = height > 0
-    height = abs(height)
-    row_bytes = width * 3
-    stride = row_bytes + ((-row_bytes) % 4)
-    raw = np.frombuffer(payload, dtype=np.uint8, count=stride * height, offset=off)
-    rows = raw.reshape(height, stride)[:, :row_bytes].reshape(height, width, 3)
-    if flip:
-        rows = rows[::-1]
-    return width, height, rows[..., ::-1]  # BGR → RGB
-
-
-def resize_nearest(px: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
-    """Nearest-neighbor resize by index sampling (vectorized)."""
-    h, w = px.shape[:2]
-    yi = (np.arange(out_h) * h // out_h).clip(0, h - 1)
-    xi = (np.arange(out_w) * w // out_w).clip(0, w - 1)
-    return px[yi][:, xi]
-
-
-# ------------------------------------------------------------------ WAV
-def make_wav(n_samples: int, sample_rate: int = 16000, freq: float = 440.0) -> bytes:
-    """Deterministic mono 16-bit PCM WAV (stdlib wave module)."""
-    import io
-    import wave
-
-    t = np.arange(n_samples, dtype=np.float64) / sample_rate
-    pcm = (np.sin(2 * np.pi * freq * t) * 20000).astype("<i2")
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(sample_rate)
-        w.writeframes(pcm.tobytes())
-    return buf.getvalue()
-
-
-def decode_wav(payload: bytes) -> tuple[int, int, int, np.ndarray]:
-    """(sample_rate, n_channels, n_frames, samples float64 in [-1, 1])
-    from a PCM WAV — stdlib `wave` + numpy, no codec libs."""
-    import io
-    import wave
-
-    with wave.open(io.BytesIO(payload), "rb") as w:
-        sr, nch, nframes, width = (w.getframerate(), w.getnchannels(),
-                                   w.getnframes(), w.getsampwidth())
-        raw = w.readframes(nframes)
-    if width != 2:
-        raise NotImplementedError(f"WAV sample width {width} unsupported (16-bit PCM only)")
-    samples = np.frombuffer(raw, dtype="<i2").astype(np.float64) / 32768.0
-    return sr, nch, nframes, samples
 
 
 def as_media(docs: DataFrame, kind: str = "image") -> DataFrame:
@@ -139,17 +51,14 @@ def as_media(docs: DataFrame, kind: str = "image") -> DataFrame:
 
 
 def _decode_dims(payload: bytes) -> tuple[int, int]:
-    """Dimension decode dispatch: BMP (real), FAKE (test), else the
-    documented compressed-format stub."""
+    """Dimension decode dispatch: FAKE (test), else the documented
+    media-codec stub."""
     b = bytes(payload)
-    if b[:2] == b"BM":
-        w, h, _ = decode_bmp(b)
-        return w, h
     if b.startswith(FAKE_MAGIC):
         return int(b[4:8]), int(b[8:12])
     raise NotImplementedError(
-        "compressed media codecs (PIL/ffmpeg) are not installed in this "
-        "environment; BMP/WAV decode for real, JPEG/PNG/MP4 need the libs"
+        "media codecs (PIL/ffmpeg) are not installed in this environment; "
+        "only the FAKE test format decodes"
     )
 
 
@@ -171,66 +80,6 @@ def decode_metadata(media: DataFrame) -> DataFrame:
             )
 
     return media.mapInPandas(fn, schema="doc_id long, width int, height int, sha256 string, n_bytes long")
-
-
-def image_features(media: DataFrame, grid: int = 8) -> DataFrame:
-    """(doc_id, width, height, mean_r, mean_g, mean_b, thumb
-    array<float>): REAL image decode + feature extraction for BMP
-    payloads — nearest-neighbor grid×grid grayscale thumbnail (the
-    embedding-input shape a vision encoder consumes) plus mean color.
-    Arrow-batched; one numpy pass per image."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "width": [], "height": [],
-                   "mean_r": [], "mean_g": [], "mean_b": [], "thumb": []}
-            for did, b in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, px = decode_bmp(bytes(b))
-                small = resize_nearest(px, grid, grid).astype(np.float32)
-                gray = small.mean(axis=2) / 255.0
-                means = px.reshape(-1, 3).mean(axis=0)
-                out["doc_id"].append(did)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["mean_r"].append(round(float(means[0]), 2))
-                out["mean_g"].append(round(float(means[1]), 2))
-                out["mean_b"].append(round(float(means[2]), 2))
-                out["thumb"].append(gray.ravel().tolist())
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(
-        fn,
-        schema="doc_id long, width int, height int, mean_r double, "
-               "mean_g double, mean_b double, thumb array<float>",
-    )
-
-
-def audio_features(media: DataFrame, target_sr: int = 4000) -> DataFrame:
-    """(doc_id, sample_rate, n_frames, duration_s, rms, resampled
-    array<float>): REAL PCM-WAV decode + features — duration, RMS
-    loudness, and a decimated resample (the batch shape an audio
-    encoder consumes)."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "sample_rate": [], "n_frames": [],
-                   "duration_s": [], "rms": [], "resampled": []}
-            for did, b in zip(pdf["doc_id"], pdf["payload"]):
-                sr, _nch, nframes, samples = decode_wav(bytes(b))
-                step = max(1, sr // target_sr)
-                out["doc_id"].append(did)
-                out["sample_rate"].append(sr)
-                out["n_frames"].append(nframes)
-                out["duration_s"].append(round(nframes / sr, 4))
-                out["rms"].append(round(float(np.sqrt(np.mean(samples**2))), 4))
-                out["resampled"].append(samples[::step].astype(np.float32).tolist())
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(
-        fn,
-        schema="doc_id long, sample_rate int, n_frames long, duration_s double, "
-               "rms double, resampled array<float>",
-    )
 
 
 def extract_features(media: DataFrame, dim: int = 16) -> DataFrame:

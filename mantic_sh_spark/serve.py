@@ -20,13 +20,13 @@ Scale notes (what changes at 10^12 docs, nothing structural):
   * per-term df comes from the terms directory with a lazy per-term
     cache — the reader never materializes the vocabulary.
   * posting blocks load per (term) via parquet row-group pruning (the
-    build sorts each segment by term) and stay in a hot-term LRU —
-    repeated/zipfian query terms hit memory, cold terms cost one
-    columnar read. Replicas shard by index or by segment range when
-    one box can't hold the hot set.
+    build sorts each segment by term) and stay in the reader's one
+    byte-budgeted LRU (_LRU) — repeated/zipfian query terms hit memory,
+    cold terms cost one columnar read. Replicas shard by index or by
+    segment range when one box can't hold the hot set.
   * result urls/snippets cost one docs read that decodes only the
     ~64 KB row groups holding the ≤k ids, pruned on each partition's
-    footer statistics (cached per segment, byte-budgeted).
+    footer statistics (cached per segment in the same LRU).
   * results are (doc_id, score) — identical, by test, to wand_topk;
     phrase results identical to phrase_topk (positional indexes).
 
@@ -64,28 +64,30 @@ class TierBudgetExceeded(ValueError):
     a distributed full-corpus pass, the semantics' native cost), or
     raise the cap on a reader with the memory to back it."""
 
-# Byte budget for the per-segment tombstone-array cache (the kernel's
-# liveness input): without it a query mix touching every segment of a
-# heavily-churned index would converge _dead_cache to the full
-# tombstone volume resident (review r5 finding). LRU eviction; one
-# segment's array is the unit.
-_DEAD_CACHE_BUDGET = 256 * 1024 * 1024
+# Byte budget of the reader's one cache (_LRU): term frames, decoded
+# postings, df/tid entries, per-segment tombstone arrays, docs footer
+# indexes and tier handles, verdicts and specs all share it, least
+# recently used first out. Decoded postings run ~12x their varint form
+# and dominate it once dense (BM25/phrase) terms are hot — each hit
+# skips the decode pass that dominates those queries.
+_CACHE_BUDGET = 512 * 1024 * 1024
 
+# What a cache entry is charged beyond its payload bytes: every entry
+# pays _ENTRY_BYTES (key, slot and value objects — so zero-payload
+# entries such as df probes of absent terms still fill the budget), and
+# each row of a term frame pays _ROW_BYTES on top of its binary payload
+# (its scalar columns plus one Python bytes object per payload cell).
+_ENTRY_BYTES = 128
+_ROW_BYTES = 192
+_PAYLOAD_COLS = ("doc_gaps", "tfs", "dls", "positions")
 
-# Byte budget for the decoded-postings LRU: decoded arrays run ~12x
-# their varint form, so this cache holds far fewer ENTRIES than the
-# compressed block LRU — but each hit skips the decode pass that
-# dominates dense-term (BM25/phrase) queries once frames are hot
-# (measured: the stop-word-phrase p50 is ~100% decode+kernel, 0% fetch).
-_DECODE_BUDGET = 256 * 1024 * 1024
-
-
-# Byte budget for the per-segment docs-footer cache (_docs_segment: the
-# open docs files plus their per-row-group doc_id min/max, the pruning
-# input of _doc_fields). LRU eviction; one segment is the unit.
-_DOCS_META_BUDGET = 64 * 1024 * 1024
+# the counters every query starts from, and those it adds into the
+# reader totals (_record_stats)
+_STATS0 = ("segments_touched", "blocks_considered", "blocks_decoded", "terms_cold")
+_SUMMED = _STATS0 + ("decoded_hits", "tier_stream_intersects")
 
 _I64 = np.iinfo(np.int64)
+_NO_IDS = np.empty(0, dtype=np.int64)
 
 
 def format_snippet(text: str | None, terms: list[str], width: int = 160) -> str:
@@ -104,33 +106,26 @@ def format_snippet(text: str | None, terms: list[str], width: int = 160) -> str:
     return ("…" if start > 0 else "") + text[start:end].strip() + ("…" if end < len(text) else "")
 
 
-def _decoded_nbytes(value) -> int:
-    """Recursive nbytes of a decoded payload (tuples/lists of ndarrays)."""
-    if isinstance(value, (tuple, list)):
-        return sum(_decoded_nbytes(v) for v in value)
-    return int(getattr(value, "nbytes", 0))
-
-
-class _DecodedLRU:
-    """Byte-budgeted LRU of decoded posting payloads, keyed by
-    (namespace, term). Thread-safe; the reader clears it on refresh()
-    (same lifetime discipline as the compressed block LRUs). An entry
+class _LRU:
+    """The reader's one cache: a byte-budgeted LRU over namespaced keys
+    (("blocks", term), ("df", term), ("dead", segment), ("k", segment,
+    term), ...). Each entry is charged its payload bytes plus
+    _ENTRY_BYTES; the least recently used entries go first, and an entry
     larger than the whole budget is served but never cached.
 
-    clear() bumps a GENERATION; puts carry the generation their decode
-    started under and are dropped if a clear raced in between (checked
-    under the same lock clear() takes, so the check is atomic). Without
-    this, a query straddling refresh() would install PRE-refresh
-    decoded arrays into the just-cleared cache and every later query
-    would hit stale postings — the exact race _fetch_blocks guards
-    with its epoch re-check (review r5 finding)."""
+    clear() bumps the EPOCH, and every put carries the epoch its attempt
+    started under: a stale put is dropped, checked under the same lock
+    clear() takes. So nothing read before a refresh is ever installed
+    after it — otherwise a query straddling refresh() would leave
+    pre-refresh postings or liveness in the cache for every later query.
+    Thread-safe; the reader's metadata lock is never held around it."""
 
-    def __init__(self, budget_bytes: int):
-        self.budget = int(budget_bytes)
+    def __init__(self, budget: int):
+        self.budget = int(budget)
+        self.bytes = 0
+        self.epoch = 0
         self._lock = threading.Lock()
         self._d: OrderedDict = OrderedDict()
-        self._bytes = 0
-        self.generation = 0
 
     def get(self, key):
         with self._lock:
@@ -140,84 +135,90 @@ class _DecodedLRU:
             self._d.move_to_end(key)
             return hit[0]
 
-    def put(self, key, value, generation: int | None = None) -> None:
-        nb = _decoded_nbytes(value)
+    def put(self, key, value, nbytes: int, epoch: int | None) -> None:
+        """Install `value` (None epoch: outside any attempt — dropped)."""
+        nb = int(nbytes) + _ENTRY_BYTES
         if nb > self.budget:
             return
         with self._lock:
-            if generation is not None and generation != self.generation:
-                return  # decoded from pre-clear frames — stale
+            if epoch != self.epoch:
+                return
             old = self._d.pop(key, None)
             if old is not None:
-                self._bytes -= old[1]
+                self.bytes -= old[1]
             self._d[key] = (value, nb)
-            self._bytes += nb
-            while self._bytes > self.budget and self._d:
-                _, (_v, onb) = self._d.popitem(last=False)
-                self._bytes -= onb
+            self.bytes += nb
+            while self.bytes > self.budget:
+                self.bytes -= self._d.popitem(last=False)[1][1]
 
     def clear(self) -> None:
         with self._lock:
             self._d.clear()
-            self._bytes = 0
-            self.generation += 1
+            self.bytes = 0
+            self.epoch += 1
 
 
 class _NsDecodeCache:
-    """Namespace adapter handing kernels a flat .get(term)/.put(term,
-    value) view of one _DecodedLRU (e.g. per (kind, segment)). Pins the
-    LRU generation at construction (query start) so puts from a query
-    that straddles refresh() are dropped, not installed stale."""
+    """The flat .get(term)/.put(term, value) decode-cache view the
+    kernels take, over the reader's cache under one namespace (e.g.
+    ("k", segment)). Values are decoded arrays or tuples of them,
+    charged their nbytes; puts go through IndexReader._put, so they
+    carry the calling attempt's epoch."""
 
-    __slots__ = ("_lru", "_ns", "_gen")
+    __slots__ = ("_reader", "_ns")
 
-    def __init__(self, lru: _DecodedLRU, ns: tuple, generation: int | None = None):
-        self._lru, self._ns = lru, ns
-        # callers pass the generation captured BEFORE their frame fetch
-        # (the compressed frames being decoded must be no older than the
-        # pinned generation); default pins at construction
-        self._gen = lru.generation if generation is None else generation
+    def __init__(self, reader: "IndexReader", ns: tuple):
+        self._reader, self._ns = reader, ns
 
     def get(self, term):
-        return self._lru.get(self._ns + (term,))
+        return self._reader._cache.get(self._ns + (term,))
 
     def put(self, term, value) -> None:
-        self._lru.put(self._ns + (term,), value, generation=self._gen)
+        arrs = value if isinstance(value, tuple) else (value,)
+        self._reader._put(self._ns + (term,), value, sum(a.nbytes for a in arrs))
 
 
 class IndexReader:
-    """Long-lived single-index reader: metadata memo + hot-term block
-    LRU + per-term df cache. THREAD-SAFE for concurrent queries under a
-    single-writer refresh discipline: shared caches (term metadata,
-    hot-term LRUs) mutate only under an internal lock, kernel execution
-    runs lock-free on the immutable fetched frames, and refresh() takes
-    the same lock so a reload can never interleave with a cache fill
-    (no torn refresh). Observability: per-query and cumulative
-    read-amplification counters — segments_touched, blocks_considered,
-    blocks_decoded, decoded_hits, terms_cold — via `counters()`; the
-    considered/decoded gap is the block-max skip win, the number an
-    operator watches at 100× scale."""
+    """Long-lived single-index reader over three single mechanisms:
 
-    def __init__(self, index_dir: str, k1: float = K1, b: float = B,
-                 max_hot_terms: int = 4096):
+    * ONE query lifecycle — every query (topk, phrase_topk,
+      tiered_topk, references, definitions) is one `_query(attempt)`
+      call: reset `truncated`, fresh stats, `_run`'s retry rules, one
+      `_record_stats`.
+    * ONE cache — `_LRU`, byte-budgeted (_CACHE_BUDGET); every install
+      is checked against the epoch its attempt started under, and
+      refresh() clears it and bumps that epoch.
+    * ONE liveness rule — `_dead(seg)` (the Spark engine's
+      wand._load_dead), with `_live_mask(ids)` over it.
+
+    THREAD-SAFE for concurrent queries under a single-writer refresh
+    discipline: kernels run lock-free on immutable cached frames, all
+    parquet I/O runs outside the reader lock, and the lock guards only
+    the metadata swap and the counters. Observability: per-query and
+    cumulative read-amplification counters — segments_touched,
+    blocks_considered, blocks_decoded, decoded_hits, terms_cold — via
+    `counters()`; the considered/decoded gap is the block-max skip win,
+    the number an operator watches at 100× scale."""
+
+    def __init__(self, index_dir: str, k1: float = K1, b: float = B):
         self.paths = IndexPaths(index_dir)
         self.k1, self.b = k1, b
-        self.max_hot_terms = max_hot_terms
-        self._lock = threading.RLock()
-        self._blocks_lru: OrderedDict[str, "object"] = OrderedDict()
-        self._pos_lru: OrderedDict[str, "object"] = OrderedDict()
-        self._decoded = _DecodedLRU(_DECODE_BUDGET)
-        self._tier_ds_cache: dict[int, "object"] = {}
-        self._tier_over_cap: dict[tuple[int, int], bool] = {}
-        self._df_cache: dict[str, tuple[int, int]] = {}  # term → (df, tid)
-        # truncated is THREAD-LOCAL: under serve_loop concurrency each
-        # worker thread must see its own query's ST4 flag, not a racing
-        # neighbor's (review r3 finding)
+        self._lock = threading.RLock()  # metadata swap + counters
+        self._refresh_lock = threading.Lock()  # one refresh at a time
+        self._cache = _LRU(_CACHE_BUDGET)
+        # truncated, last_stats and the attempt epoch are THREAD-LOCAL:
+        # under serve_loop concurrency each worker thread must see its
+        # own query's state, not a racing neighbor's (review r3 finding)
         self._tls = threading.local()
         self._last_shared: dict = {}  # most-recent counters, any thread
-        self._epoch = 0  # bumped by refresh(): invalidates ALL threads'
-        #                  thread-local last_stats, not just the caller's
         self.refresh()
+
+    @property
+    def _epoch(self) -> int:
+        """The cache's epoch, bumped by every refresh(): the reader's
+        one staleness counter (cache installs, straddling-query
+        re-runs, thread-local last_stats)."""
+        return self._cache.epoch
 
     @property
     def truncated(self) -> bool:
@@ -252,19 +253,32 @@ class IndexReader:
 
     # ---------------------------------------------------------- metadata
     def refresh(self) -> None:
-        """Reload index metadata and drop caches — call after a
-        build/extend/merge/delete touched this index. Takes the reader
-        lock: concurrent queries either see the old state or the new,
-        never a half-swapped one."""
-        with self._lock:
-            self._refresh_locked()
+        """Reload index metadata and drop the cache — call after a
+        build/extend/merge/delete touched this index. The metadata reads
+        run outside the reader lock; the swap, the counter reset and the
+        cache clear (the epoch bump) run under it, so a concurrent query
+        sees the old state or the new one, and an attempt that straddled
+        the swap re-runs (_run)."""
+        with self._refresh_lock:
+            meta = self._read_meta()
+            with self._lock:
+                vars(self).update(meta)
+                # counters restart with the new index state (counters()
+                # promises totals "since construction/refresh")
+                self._last_shared = {}
+                self.totals = dict.fromkeys(("queries",) + _SUMMED + ("docs_row_groups",), 0)
+                self._cache.clear()
 
-    def _refresh_locked(self) -> None:
-        import pyarrow.dataset as ds
+    def _read_meta(self) -> dict:
+        """The reader attributes a refresh installs: collection stats,
+        per-segment bound factors, manifest gating, the tombstone census
+        and the postings/terms dataset handles."""
+        import re
+
         import pyarrow.parquet as pq
 
         cs = pq.read_table(self.paths.collection_stats).to_pydict()
-        self.n_docs, self.avgdl = int(cs["n_docs"][0]), float(cs["avgdl"][0])
+        n_docs, avgdl = int(cs["n_docs"][0]), float(cs["avgdl"][0])
 
         # per-segment block-max bound inflation under avgdl drift (same rule
         # as operators/wand.py _index_meta), plus reader live-segment
@@ -272,9 +286,8 @@ class IndexReader:
         # listing, decide which segments serve (functions/liveness.py —
         # an in-flight or crashed merge/extend fold's partial dirs are
         # excluded until the fold closes or the next mutation GCs it)
-        self.bound_factors: dict[int, float] = {}
-        self._excluded_segs: frozenset = frozenset()
-        self._liveness_union = False
+        bound_factors: dict[int, float] = {}
+        excluded, in_fold = frozenset(), False
         man = self._read_optional(
             self.paths.manifest,
             ["segment_id", "build_avgdl", "stage", "status", "started_at"],
@@ -284,70 +297,41 @@ class IndexReader:
             ba = pdf.dropna(subset=["build_avgdl"])
             if len(ba):
                 mins = ba.groupby("segment_id")["build_avgdl"].min()
-                self.bound_factors = {
-                    int(s): max(1.0, self.avgdl / float(v)) for s, v in mins.items()
-                }
+                bound_factors = {int(s): max(1.0, avgdl / float(v)) for s, v in mins.items()}
             if {"stage", "status", "started_at"} <= set(pdf.columns):
                 from .functions.liveness import reader_exclusions
 
-                self._excluded_segs, self._liveness_union = reader_exclusions(
+                excluded, in_fold = reader_exclusions(
                     zip(pdf["segment_id"], pdf["stage"], pdf["status"],
                         pdf["started_at"].fillna(0.0))
                 )
 
         # per-SEGMENT liveness: only the metadata-sized set of segments
-        # that have tombstone partitions loads at refresh; each
-        # segment's sorted dead-id array loads lazily on first touch
-        # (and caches until the next refresh). No global tombstone
-        # array exists anywhere in the reader.
-        self._dead_segs: frozenset[int] = frozenset()
-        self._dead_cache: OrderedDict[int, np.ndarray] = OrderedDict()
-        self._dead_cache_bytes = 0
+        # that have tombstone partitions loads here; each segment's
+        # sorted dead-id array loads lazily on first touch (_dead). A
+        # purge deletes every tombstone PARTITION but leaves the root
+        # dir: the dataset then has a column-less schema — clean, not a
+        # crash. Partition membership comes from the hive fragment
+        # paths, never the segment_id column (one int64 per tombstone,
+        # 8 GB at 1e9 — review r5 finding).
+        dead_segs = set()
         t = self._dataset_or_none(self.paths.tombstones)
-        # a purge deletes every tombstone PARTITION but leaves the root
-        # dir: the dataset then exists with a column-less schema — treat
-        # it as clean, don't crash the refresh.
-        # METADATA-ONLY census (review r5 finding): partition membership
-        # comes from the hive fragment paths — materializing the
-        # segment_id column here would allocate one int64 per tombstone
-        # (8 GB at 1e9) on every refresh.
         if t is not None and "segment_id" in t.schema.names:
-            import re as _re
-
-            segs = set()
             for frag in t.get_fragments():
-                m = _re.search(r"segment_id=(-?\d+)", frag.path)
+                m = re.search(r"segment_id=(-?\d+)", frag.path)
                 if m:
-                    segs.add(int(m.group(1)))
-            self._dead_segs = frozenset(segs)
-
-        # an empty-corpus index commits only collection_stats + manifest
-        # (no postings/terms/docs dirs) — serve it as empty, not a crash
-        self._postings = self._dataset_or_none(self.paths.postings)
-        self._terms = self._dataset_or_none(self.paths.terms)
-        # docs partitions are listed and their footers parsed lazily, on
-        # a segment's first fetch (_docs_segment) — nothing here
-        self._docs_meta: OrderedDict[int, tuple] = OrderedDict()
-        self._docs_meta_bytes = 0
-        self._tier_specs_cache = None
-        self._tier_ds_cache.clear()
-        self._tier_over_cap.clear()
-        self._blocks_lru.clear()
-        self._pos_lru.clear()
-        self._decoded.clear()
-        self._df_cache.clear()
-        self._dead_cache.clear()
-        self._dead_cache_bytes = 0
-        self._dead_union_cache = None  # in-flux merge window liveness
-        # counters restart with the new index state (counters() promises
-        # totals "since construction/refresh"); the epoch bump
-        # invalidates every thread's thread-local last_stats
-        self._last_shared = {}
-        self._epoch += 1
-        self.totals = {"queries": 0, "segments_touched": 0,
-                       "blocks_considered": 0, "blocks_decoded": 0,
-                       "terms_cold": 0, "decoded_hits": 0,
-                       "tier_stream_intersects": 0, "docs_row_groups": 0}
+                    dead_segs.add(int(m.group(1)))
+        return {
+            "n_docs": n_docs, "avgdl": avgdl, "bound_factors": bound_factors,
+            "_excluded_segs": excluded, "_dead_segs": frozenset(dead_segs),
+            # a committed-not-done merge fold's excluded sources whose
+            # tombstones are not yet re-homed or purged (see _dead)
+            "_influx": excluded & dead_segs if in_fold else frozenset(),
+            # an empty-corpus index commits only collection_stats +
+            # manifest (no postings/terms/docs dirs) — serve it as empty
+            "_postings": self._dataset_or_none(self.paths.postings),
+            "_terms": self._dataset_or_none(self.paths.terms),
+        }
 
     @staticmethod
     def _dataset_or_none(path: str):
@@ -371,6 +355,86 @@ class IndexReader:
         have = set(d.schema.names)
         return d.to_table(columns=[c for c in columns if c in have])
 
+    # --------------------------------------------------------- lifecycle
+    def _run(self, attempt):
+        """attempt() under the two retry rules every read shares — the
+        reader's one retry loop:
+
+        * self-heal: an OSError (dataset handles an EXTERNAL mutation
+          invalidated, e.g. a merge retired segment files a handle still
+          lists) refreshes once and retries; if that refresh itself
+          fails, the ORIGINAL error propagates (a deliberate
+          missing-sidecar FileNotFoundError must not be masked by the
+          refresh's own failure), and a second OSError propagates.
+        * straddle: an attempt a concurrent refresh() landed in re-runs
+          against the new epoch, up to 3 attempts in all — without it
+          an answer could mix pre-refresh postings with post-refresh
+          liveness (a purge-merge clears tombstones whose postings the
+          attempt already fetched → a purged doc resurfaces).
+
+        The attempt's start epoch is this thread's install epoch (_put)
+        for its duration; nested runs restore the outer one."""
+        outer = getattr(self._tls, "epoch", None)
+        healed = False
+        try:
+            for n in range(3):
+                self._tls.epoch = epoch = self._epoch
+                try:
+                    out = attempt()
+                except OSError as first:
+                    if healed or n == 2:
+                        raise
+                    healed = True
+                    try:
+                        self.refresh()
+                    except OSError:
+                        raise first
+                    continue
+                if self._epoch == epoch:
+                    break
+            return out
+        finally:
+            self._tls.epoch = outer
+
+    def _query(self, attempt):
+        """The one query lifecycle: reset `truncated`, hand each attempt
+        a fresh stats dict, run it under _run, record the stats once.
+        attempt(stats, t0) → the answer."""
+        t0 = time.time()
+        stats: dict = {}
+
+        def once():
+            self.truncated = False
+            stats.clear()
+            stats.update(dict.fromkeys(_STATS0, 0))
+            return attempt(stats, t0)
+
+        out = self._run(once)
+        self._record_stats(stats, t0)
+        return out
+
+    def _put(self, key, value, nbytes: int) -> None:
+        """Cache install under this thread's attempt epoch (_run)."""
+        self._cache.put(key, value, nbytes, getattr(self._tls, "epoch", None))
+
+    def _record_stats(self, stats: dict, t0: float) -> None:
+        stats["ms"] = round((time.time() - t0) * 1e3, 3)
+        self._tls.last_stats = stats
+        self._tls.stats_epoch = self._epoch
+        with self._lock:
+            self._last_shared = stats
+            self.totals["queries"] += 1
+            for key in _SUMMED:
+                self.totals[key] += stats.get(key, 0)
+
+    def counters(self) -> dict:
+        """Read-amplification observability: counters for the LAST query
+        (segments touched, block rows considered, blocks actually
+        decoded — the gap is the skip win — and cache-miss terms) plus
+        cumulative totals since construction/refresh."""
+        with self._lock:
+            return {"last": dict(self._last_shared), "total": dict(self.totals)}
+
     # ---------------------------------------------------------- lookups
     def _meta(self, terms: list[str]) -> dict[str, tuple[int, int]]:
         """{term: (global df, tid)} — lazy, cached; df 0 when absent.
@@ -383,201 +447,149 @@ class IndexReader:
 
         from .functions.termhash import term_tid
 
-        with self._lock:
-            hits = {t: self._df_cache[t] for t in terms if t in self._df_cache}
-            terms_ds = self._terms
-            excl = self._excluded_segs
-            epoch = self._epoch
-        missing = sorted(set(terms) - hits.keys())
-        got: dict[str, tuple[int, int]] = {}
+        out: dict[str, tuple[int, int]] = {}
+        for t in set(terms):
+            hit = self._cache.get(("df", t))
+            if hit is not None:
+                out[t] = hit
+        missing = sorted(set(terms) - out.keys())
         if missing:
-            # terms-directory I/O outside the lock (same discipline as
-            # _fetch_blocks): concurrent cache-hit queries never wait on
-            # a cold df probe; racing threads install identical entries
             tid_of = {t: term_tid(t) for t in missing}
-            if terms_ds is None:
-                got = {t: (0, tid_of[t]) for t in missing}
-            else:
+            dfs: dict[int, int] = {}
+            terms_ds, excl = self._terms, self._excluded_segs
+            if terms_ds is not None:
                 flt = ds.field("tid").isin(sorted(tid_of.values()))
                 if excl:
                     # an in-flight/crashed fold's partial segments would
                     # double-count df against the live sources
                     flt = flt & ~ds.field("segment_id").isin(sorted(excl))
-                tbl = terms_ds.to_table(
-                    filter=flt,
-                    columns=["tid", "df"],
-                )
+                tbl = terms_ds.to_table(filter=flt, columns=["tid", "df"])
                 agg = tbl.to_pandas().groupby("tid")["df"].sum()
                 dfs = {int(t): int(v) for t, v in agg.items()}
-                got = {t: (dfs.get(tid_of[t], 0), tid_of[t]) for t in missing}
-            with self._lock:
-                if self._epoch == epoch:  # don't resurrect pre-refresh dfs
-                    self._df_cache.update(got)
-        # return the LOCAL snapshot (first-lock hits + this call's own
-        # fetch), never a cache re-read: a refresh() racing between the
-        # install above and a final cache read can clear the cache and
-        # KeyError on terms installed a moment earlier (seen as a rare
-        # concurrent-test failure). A pre-refresh snapshot is valid for
-        # the in-flight query by the same reasoning as every other
-        # epoch-checked path.
-        return {**hits, **got}
+            for t in missing:
+                out[t] = (dfs.get(tid_of[t], 0), tid_of[t])
+                self._put(("df", t), out[t], 0)
+        return out
 
     def df(self, terms: list[str]) -> dict[str, int]:
         """Global document frequency per term (lazy, cached)."""
-        return {t: m[0] for t, m in self._meta(terms).items()}
-
-    def _self_heal(self, attempt_fn):
-        """Run attempt_fn(); on an I/O error from dataset handles an
-        EXTERNAL mutation invalidated (a merge retired segment files
-        the handle still lists), refresh() and retry once — same
-        contract as topk's inline form (which also folds in the
-        straddling-refresh epoch retry). If the refresh itself fails,
-        the ORIGINAL error propagates (e.g. a deliberate
-        missing-sidecar FileNotFoundError on a bogus path must not be
-        masked by the refresh's own failure)."""
-        try:
-            return attempt_fn()
-        except OSError as first:
-            try:
-                self.refresh()
-            except OSError:
-                raise first
-            return attempt_fn()
+        return self._run(lambda: {t: m[0] for t, m in self._meta(terms).items()})
 
     def _dead(self, seg: int) -> "np.ndarray | None":
         """This segment's sorted tombstoned doc ids (None when clean) —
-        lazy per-segment read of the partitioned liveness sidecar.
-        While a merge fold sits between its barriers (committed, not
-        done — see _refresh_locked), tombstone ownership is in flux
-        (src partitions not yet re-homed/purged while dst already
-        serves those docs): every segment then uses the UNION of all
-        partitions, which is over-inclusive and therefore correct."""
-        if self._liveness_union:
-            return self._dead_union()
-        return self._dead_raw(seg)
+        the one liveness rule, the Spark engine's (wand._load_dead): the
+        segment's own tombstone partition, plus, while a merge fold sits
+        between its barriers (committed, not done), the fold's in-flux
+        partitions — its retired sources' tombstones, not yet re-homed
+        or purged, cover docs its dst already serves (over-inclusion is
+        correct: ids a segment never held never match). Read on first
+        touch, cached per segment."""
+        hit = self._cache.get(("dead", seg))
+        if hit is None:
+            from .operators.wand import _load_dead
 
-    def _dead_raw(self, seg: int) -> "np.ndarray | None":
-        """The per-partition read behind _dead (no union dispatch —
-        _dead_union builds FROM these, so routing it through _dead
-        would recurse)."""
-        if seg not in self._dead_segs:
-            return None
-        with self._lock:
-            arr = self._dead_cache.get(seg)
-            if arr is not None:
-                self._dead_cache.move_to_end(seg)
-            else:
-                from .operators.delete import segment_tombstones
+            hit = _load_dead((self.paths.tombstones, self._dead_segs, self._influx), seg)
+            hit = _NO_IDS if hit is None else hit
+            self._put(("dead", seg), hit, hit.nbytes)
+        return hit if len(hit) else None
 
-                arr = segment_tombstones(self.paths.tombstones, seg)
-                self._dead_cache[seg] = arr
-                self._dead_cache_bytes += arr.nbytes
-                while (self._dead_cache_bytes > _DEAD_CACHE_BUDGET
-                       and len(self._dead_cache) > 1):
-                    _, old = self._dead_cache.popitem(last=False)
-                    self._dead_cache_bytes -= old.nbytes
-        return arr if len(arr) else None
+    def _live_mask(self, ids: "np.ndarray") -> "np.ndarray":
+        """Boolean mask of the non-tombstoned entries of a SORTED doc-id
+        array — the check shared by tier membership, the
+        earlier-tiers-pin-top-k skip and the session boost (a dead doc
+        must neither rank, pin nor be boosted). A tombstone sits under
+        its POSTINGS-owning segment, which a non-purge merge moves away
+        from doc_id // SEG_STRIDE, so every dead partition is checked."""
+        def mask():
+            live = np.ones(len(ids), dtype=bool)
+            for seg in self._dead_segs:
+                dead = self._dead(seg)
+                if dead is not None:
+                    j = np.searchsorted(dead, ids)
+                    live &= ~((j < len(dead)) & (dead[np.minimum(j, len(dead) - 1)] == ids))
+            return live
 
-    def _fetch_blocks(self, lru: OrderedDict, columns: list[str],
-                      terms: list[str], stats: dict | None = None) -> dict[str, "object"]:
-        """Shared LRU-cached block fetch (BM25 and positional paths
-        differ only in cache + column list): term → tid resolution via
-        the terms directory, row-group-pruned read of the missing tids,
-        per-term grouping, negative caching for absent terms, LRU
-        eviction. Runs under the reader lock (cache mutation); the
-        returned frames are treated as immutable by every kernel, so
-        concurrent queries share them safely."""
+        return self._run(mask) if len(ids) else np.ones(0, dtype=bool)
+
+    def _fetch_blocks(self, ns: str, columns: list[str], terms: list[str],
+                      stats: dict | None = None) -> dict[str, "object"]:
+        """term → blocks frame, cached under (ns, term) — the BM25 and
+        positional paths differ only in namespace + column list: term →
+        tid resolution via the terms directory, one row-group-pruned
+        read of the missing tids, per-term grouping, negative caching
+        of absent terms. A frame is charged its binary payload bytes
+        plus _ROW_BYTES per row; every kernel treats the frames as
+        immutable, so concurrent queries share them."""
+        import pyarrow.compute as pc
         import pyarrow.dataset as ds
 
-        with self._lock:
-            out = {}
-            missing = []
-            for t in terms:
-                hit = lru.get(t)
-                if hit is not None:
-                    lru.move_to_end(t)
-                    out[t] = hit
-                else:
-                    missing.append(t)
-            postings = self._postings
-            excl = self._excluded_segs
-            epoch = self._epoch
-        if missing:
-            # the parquet fetch runs OUTSIDE the lock — a cold-term read
-            # must not serialize concurrent LRU-hit queries (review r3
-            # finding); two threads racing on the same term both fetch
-            # and install identical frames (idempotent)
-            if stats is not None:
-                stats["terms_cold"] = stats.get("terms_cold", 0) + len(missing)
-            _tf = time.time()
-            meta = self._meta(missing)
-            tid2term = {m[1]: t for t, m in meta.items() if m[0] > 0}
-            if tid2term:
-                flt = ds.field("tid").isin(list(tid2term))
-                if excl:
-                    # gate out an in-flight/crashed fold's partial
-                    # segments (manifest-derived — see _refresh_locked)
-                    flt = flt & ~ds.field("segment_id").isin(sorted(excl))
-                tbl = postings.to_table(filter=flt, columns=columns)
-                pdf = tbl.to_pandas()
+        out, missing = {}, []
+        for t in terms:
+            hit = self._cache.get((ns, t))
+            if hit is None:
+                missing.append(t)
             else:
-                import pandas as pd
+                out[t] = hit
+        if not missing:
+            return out
+        if stats is not None:
+            stats["terms_cold"] = stats.get("terms_cold", 0) + len(missing)
+        _tf = time.time()
+        postings, excl = self._postings, self._excluded_segs
+        meta = self._meta(missing)
+        tid2term = {m[1]: t for t, m in meta.items() if m[0] > 0}
+        if tid2term:
+            flt = ds.field("tid").isin(list(tid2term))
+            if excl:
+                # gate out an in-flight/crashed fold's partial
+                # segments (manifest-derived — see _read_meta)
+                flt = flt & ~ds.field("segment_id").isin(sorted(excl))
+            tbl = postings.to_table(filter=flt, columns=columns)
+            pdf = tbl.to_pandas()
+            size = np.full(len(pdf), _ROW_BYTES, dtype=np.int64)
+            for c in _PAYLOAD_COLS:
+                if c in columns:
+                    size += pc.binary_length(tbl[c]).fill_null(0).to_numpy()
+        else:
+            import pandas as pd
 
-                pdf = pd.DataFrame({c: [] for c in columns})
-            if stats is not None:
-                # cold-I/O share of the query (terms-dir probe + pruned
-                # postings read + pandas conversion) — separates "the
-                # fetch got slower" from "the kernel got slower" when a
-                # p90 drifts (r4 what's-wrong #4 diagnosability)
-                stats["fetch_ms"] = round(
-                    stats.get("fetch_ms", 0.0) + (time.time() - _tf) * 1e3, 3)
-            with self._lock:
-                # frames fetched from a pre-refresh dataset handle must
-                # not be INSTALLED after a racing refresh cleared the
-                # caches (they'd serve stale postings to later queries);
-                # the in-flight query still gets them via `out`
-                fresh = self._epoch == epoch
-                found = set()
-                for tid, g in pdf.groupby("tid"):
-                    t = tid2term[int(tid)]
-                    g = g.reset_index(drop=True)
-                    out[t] = g
-                    found.add(t)
-                    if fresh:
-                        lru[t] = g
-                for t in missing:
-                    if t not in found:
-                        empty = pdf.iloc[0:0]
-                        out[t] = empty
-                        if fresh:
-                            lru[t] = empty
-                while len(lru) > self.max_hot_terms:
-                    lru.popitem(last=False)
+            pdf = pd.DataFrame({c: [] for c in columns})
+        if stats is not None:
+            # cold-I/O share of the query (terms-dir probe + pruned
+            # postings read + pandas conversion) — separates "the
+            # fetch got slower" from "the kernel got slower" when a
+            # p90 drifts (r4 what's-wrong #4 diagnosability)
+            stats["fetch_ms"] = round(
+                stats.get("fetch_ms", 0.0) + (time.time() - _tf) * 1e3, 3)
+        for tid, g in pdf.groupby("tid"):
+            t = tid2term[int(tid)]
+            out[t] = g.reset_index(drop=True)
+            self._put((ns, t), out[t], int(size[g.index.to_numpy()].sum()))
+        for t in missing:
+            if t not in out:
+                out[t] = pdf.iloc[0:0]
+                self._put((ns, t), out[t], 0)
         return out
 
     def _blocks(self, terms: list[str], stats: dict | None = None) -> dict[str, "object"]:
-        """term → pandas blocks frame (with segment_id), LRU-cached."""
-        return self._fetch_blocks(self._blocks_lru, _POSTING_COLS + ["segment_id"], terms,
-                                  stats=stats)
+        """term → pandas blocks frame (with segment_id), cached."""
+        return self._fetch_blocks("blocks", _POSTING_COLS + ["segment_id"], terms, stats)
 
     def _docs_segment(self, seg: int) -> tuple:
         """One docs partition's row-group index: (open ParquetFiles,
         per-row-group doc_id min, max and running max of max, file and
-        row-group position, footprint bytes), ordered by min. Listed
-        and footer-parsed on the segment's first fetch after refresh(),
-        then cached — no fetch re-parses a footer. I/O runs outside the lock; the install
-        is epoch-checked (a pre-refresh listing is never cached). A row
-        group without doc_id statistics spans every id, so its file
-        falls back to full reads; a missing partition is empty."""
+        row-group position), ordered by min. Listed and footer-parsed on
+        the segment's first fetch after refresh(), then cached (charged
+        its footers' serialized size plus its arrays) — no fetch
+        re-parses a footer. A row group without doc_id statistics spans
+        every id, so its file falls back to full reads; a missing
+        partition is empty."""
         import pyarrow.dataset as ds
         import pyarrow.parquet as pq
 
-        with self._lock:
-            hit = self._docs_meta.get(seg)
-            if hit is not None:
-                self._docs_meta.move_to_end(seg)
-                return hit
-            epoch = self._epoch
+        hit = self._cache.get(("docs", seg))
+        if hit is not None:
+            return hit
         files, lo, hi, fpos, rpos, nbytes = [], [], [], [], [], 0
         try:
             part = ds.dataset(f"{self.paths.docs}/segment_id={seg}", format="parquet")
@@ -602,14 +614,8 @@ class IndexReader:
         lo, hi, fpos, rpos = (np.asarray(a, dtype=np.int64)[order] for a in (lo, hi, fpos, rpos))
         hi_run = np.maximum.accumulate(hi)
         nbytes += sum(a.nbytes for a in (lo, hi, hi_run, fpos, rpos))
-        entry = (files, lo, hi, hi_run, fpos, rpos, nbytes)
-        with self._lock:
-            if self._epoch == epoch and seg not in self._docs_meta:
-                self._docs_meta[seg] = entry
-                self._docs_meta_bytes += nbytes
-                while self._docs_meta_bytes > _DOCS_META_BUDGET and len(self._docs_meta) > 1:
-                    _, old = self._docs_meta.popitem(last=False)
-                    self._docs_meta_bytes -= old[-1]
+        entry = (files, lo, hi, hi_run, fpos, rpos)
+        self._put(("docs", seg), entry, nbytes)
         return entry
 
     def _read_doc_fields(self, ids: np.ndarray, columns: list[str]) -> tuple[dict, int]:
@@ -623,7 +629,7 @@ class IndexReader:
         segs = ids // SEG_STRIDE
         for seg in np.unique(segs):
             want = ids[segs == seg]
-            files, lo, hi, hi_run, fpos, rpos, _ = self._docs_segment(int(seg))
+            files, lo, hi, hi_run, fpos, rpos = self._docs_segment(int(seg))
             # candidates of id x: row groups [a, b) — min ≤ x (b) and no
             # earlier group's max reaches x (a); keep those with max ≥ x.
             # Disjoint ascending groups (every writer's layout) give b - a ≤ 1.
@@ -650,13 +656,14 @@ class IndexReader:
         doc_id // SEG_STRIDE (docs rows never move in a merge), the
         cached per-row-group doc_id statistics pick the row groups that
         hold the ids, and each file decodes just those
-        (one read_row_groups call per file). Self-heals once across an
-        external rewrite (a purge replacing a partition's files).
-        Counts docs_row_groups into `stats` and the reader totals."""
+        (one read_row_groups call per file). Runs under _run, so it
+        self-heals across an external rewrite (a purge replacing a
+        partition's files). Counts docs_row_groups into `stats` and the
+        reader totals."""
         ids = np.unique(np.asarray(list(doc_ids), dtype=np.int64))
         if not len(ids):
             return {c: {} for c in columns}
-        out, n_rg = self._self_heal(lambda: self._read_doc_fields(ids, columns))
+        out, n_rg = self._run(lambda: self._read_doc_fields(ids, columns))
         with self._lock:
             self.totals["docs_row_groups"] += n_rg
         if stats is not None:
@@ -715,42 +722,15 @@ class IndexReader:
         segment always completes — and exceeding it stops the sweep;
         self.truncated records whether the last answer was partial.
 
-        A query that straddles a concurrent refresh() re-runs once
-        against the new epoch: without the retry an attempt could mix
-        pre-refresh postings with post-refresh liveness (e.g. a
-        purge-merge clears tombstones whose postings the attempt
-        already fetched → a purged doc resurfaces). The retry
-        linearizes the answer to the post-refresh state for direct
-        library/MCP embedders; serve_loop additionally drains before
-        refreshing.
-
-        A reader whose index was mutated by ANOTHER process self-heals:
-        its dataset handles may list segment files a merge has since
-        retired, so the read raises — refresh() rebuilds the handles
-        (and the manifest gating) and the query retries once before
-        propagating (a genuine I/O error must not loop)."""
-        t0 = time.time()
-        for attempt in range(3):
-            epoch0 = self._epoch
-            stats = {"segments_touched": 0, "blocks_considered": 0,
-                     "blocks_decoded": 0, "terms_cold": 0}
-            try:
-                hits = self._topk_attempt(query, k, budget_ms, stats, t0)
-            except OSError:
-                if attempt:
-                    raise
-                self.refresh()
-                continue
-            if self._epoch == epoch0:
-                break
-        self._record_stats(stats, t0)
-        return hits
+        Runs through _query: a query that straddles a concurrent
+        refresh() re-runs against the new epoch, and a reader whose
+        index ANOTHER process mutated self-heals (refresh + one retry)."""
+        return self._query(lambda stats, t0: self._topk_attempt(query, k, budget_ms, stats, t0))
 
     def _topk_attempt(self, query: str, k: int, budget_ms: float | None,
                       stats: dict, t0: float) -> list[tuple[int, float]]:
         from .operators.wand import block_topk
 
-        self.truncated = False
         if self._postings is None:
             return []
         terms = tokenize_query(query)
@@ -758,10 +738,6 @@ class IndexReader:
         idf_map = {t: idf_fn(self.n_docs, dfs[t]) for t in terms if dfs[t] > 0}
         if not idf_map:
             return []
-        # decoded-LRU generation pinned BEFORE the frame fetch: a
-        # refresh racing anywhere after this line makes every decode
-        # put from this query a dropped no-op instead of a stale install
-        dgen = self._decoded.generation
         blocks = self._blocks(sorted(idf_map), stats=stats)
         qterms = sorted(idf_map)
         if budget_ms is None:
@@ -773,7 +749,7 @@ class IndexReader:
             stats["segments_touched"] = len(np.unique(segs))
             return block_topk(blocks, qterms, idf_map, self.avgdl, k, self.k1, self.b,
                               self.bound_factors, self._dead, stats,
-                              _NsDecodeCache(self._decoded, ("k", -1), dgen))
+                              _NsDecodeCache(self, ("k", -1)))
         # ST4 budgeted query: one call per segment, deadline checked
         # between segments, so at least one segment always completes and
         # partial results stay segment-aligned
@@ -791,62 +767,10 @@ class IndexReader:
             hits.extend(
                 block_topk(by_term, qterms, idf_map, self.avgdl, k, self.k1, self.b,
                            self.bound_factors, self._dead, stats,
-                           _NsDecodeCache(self._decoded, ("k", seg), dgen))
+                           _NsDecodeCache(self, ("k", seg)))
             )
         hits.sort(key=lambda x: (-x[1], x[0]))
         return hits[:k]
-
-    def _dead_union(self) -> "np.ndarray | None":
-        """Sorted union of ALL segments' tombstoned doc ids, built
-        lazily and reset by refresh() — the liveness of every segment
-        while a merge fold sits between its barriers (_dead routes
-        here only then). This is serving-REPLICA state (the same
-        arrays `_dead_cache` already holds, merged once), not a query
-        closure: the no-global-tombstone-array invariant targets plans
-        and closures shipped to Spark executors, where every query
-        would re-serialize the array."""
-        with self._lock:
-            arr = self._dead_union_cache
-            epoch = self._epoch
-            dead_segs = self._dead_segs
-        if arr is None:
-            parts = [self._dead_raw(s) for s in sorted(dead_segs)]
-            parts = [p for p in parts if p is not None]
-            arr = (
-                np.sort(np.concatenate(parts))
-                if parts else np.empty(0, dtype=np.int64)
-            )
-            with self._lock:
-                # install only if no refresh() interleaved (review r4
-                # finding: a racing reload must not be poisoned with
-                # the PRE-refresh union for its whole epoch); the
-                # in-flight query still uses the snapshot it started
-                # under — the documented refresh visibility contract
-                if self._epoch == epoch and self._dead_union_cache is None:
-                    self._dead_union_cache = arr
-        return arr if len(arr) else None
-
-    def _record_stats(self, stats: dict, t0: float) -> None:
-        stats["ms"] = round((time.time() - t0) * 1e3, 3)
-        self._tls.last_stats = stats
-        self._tls.stats_epoch = self._epoch
-        with self._lock:
-            self._last_shared = stats
-            self.totals["queries"] += 1
-            # tier_stream_intersects is NOT aggregated here: it counts
-            # straight into totals at the stream site (the tiered fill
-            # path hands stats recording to topk(), which would drop it)
-            for key in ("segments_touched", "blocks_considered",
-                        "blocks_decoded", "terms_cold", "decoded_hits"):
-                self.totals[key] += stats.get(key, 0)
-
-    def counters(self) -> dict:
-        """Read-amplification observability: counters for the LAST query
-        (segments touched, block rows considered, blocks actually
-        decoded — the gap is the skip win — and LRU-miss terms) plus
-        cumulative totals since construction/refresh."""
-        with self._lock:
-            return {"last": dict(self._last_shared), "total": dict(self.totals)}
 
     @property
     def has_positions(self) -> bool:
@@ -854,11 +778,10 @@ class IndexReader:
 
     def _pos_blocks(self, terms: list[str], stats: dict | None = None) -> dict[str, "object"]:
         """term → blocks frame INCLUDING positions bytes (phrase path;
-        cached separately from the BM25 hot set so non-phrase queries
-        never hold position payloads in memory)."""
-        return self._fetch_blocks(self._pos_lru,
-                                  _POSTING_COLS + ["positions", "segment_id"], terms,
-                                  stats=stats)
+        cached under its own namespace so non-phrase queries never hold
+        position payloads in memory)."""
+        return self._fetch_blocks("pos", _POSTING_COLS + ["positions", "segment_id"], terms,
+                                  stats)
 
     def _pos_blocks_by_segment(self, terms: list[str],
                                stats: dict) -> dict[int, dict[str, "object"]]:
@@ -885,48 +808,29 @@ class IndexReader:
         (same per-segment kernel; phrase stays per-segment by design:
         verification decodes every candidate block, so there is nothing
         a global run could prune and the sliced decode is the
-        cache-friendly form). Same straddling-refresh retry and
-        external-mutation self-heal as topk."""
-        t0 = time.time()
-        for attempt in range(3):
-            epoch0 = self._epoch
-            stats = {"segments_touched": 0, "blocks_considered": 0,
-                     "blocks_decoded": 0, "terms_cold": 0}
-            try:
-                hits = self._phrase_attempt(phrase, k, slop, stats)
-            except OSError:
-                if attempt:
-                    raise
-                self.refresh()
-                continue
-            if self._epoch == epoch0:
-                break
-        self._record_stats(stats, t0)
-        return hits
+        cache-friendly form). Runs through _query, like topk."""
+        return self._query(lambda stats, t0: self._phrase_attempt(phrase, k, slop, stats))
 
     def _phrase_attempt(self, phrase: str, k: int, slop: int,
                         stats: dict) -> list[tuple[int, int]]:
         from .functions.tokenize import tokenize
         from .operators.phrase import segment_phrase_matches
 
-        self.truncated = False
         if not self.has_positions:
             raise ValueError("phrase serving requires an index built with store_positions=True")
         terms = tokenize(phrase)  # ordered, repeats kept
         if not terms:
             return []
-        dgen = self._decoded.generation  # pin BEFORE the frame fetch
         per_seg = self._pos_blocks_by_segment(sorted(set(terms)), stats)
         hits: list[tuple[int, int]] = []
         for seg, by_term in per_seg.items():
             stats["segments_touched"] += 1
-            # decode accounting lives in the kernel now: with the
-            # decoded LRU a hot term is NOT re-decoded, and counting
+            # decode accounting lives in the kernel now: with decoded
+            # postings cached a hot term is NOT re-decoded, and counting
             # here would over-report (review r5 finding)
             hits.extend(segment_phrase_matches(
                 by_term, terms, self._dead(seg), slop,
-                decoded_cache=_NsDecodeCache(self._decoded, ("p", seg), dgen),
-                stats=stats))
+                decoded_cache=_NsDecodeCache(self, ("p", seg)), stats=stats))
         hits.sort(key=lambda x: (-x[1], x[0]))
         return hits[:k]
 
@@ -960,22 +864,22 @@ class IndexReader:
 
     def _scores_for_docs(self, terms: list[str],
                          doc_ids: "np.ndarray") -> dict[int, float]:
-        """Dict form of _scores_array (session boost and other
-        bounded-set callers)."""
+        """Dict form of _scores_array for bounded-set callers outside a
+        query (the session boost), run under _run."""
         if not len(doc_ids):
             return {}
-        arr = self._scores_array(terms, np.asarray(doc_ids, dtype=np.int64))
+        arr = self._run(lambda: self._scores_array(terms, np.asarray(doc_ids, dtype=np.int64)))
         return {int(d): float(s) for d, s in zip(doc_ids, arr)}
 
     def _scores_array(self, terms: list[str],
                       doc_ids: "np.ndarray") -> "np.ndarray":
         """BM25 score of SPECIFIC docs for a term set, aligned to the
         SORTED input array (the bounded lookup behind tiered serving):
-        for small candidate sets, decode only the hot-LRU blocks whose
+        for small candidate sets, decode only the cached blocks whose
         [first_doc, last_doc] range intersects the candidate range and
         searchsorted the candidates in; above _SCORES_SWEEP_MIN
-        candidates, decode each term in full (doc-sorted,
-        decoded-LRU-cached under ("s", term)) and do ONE searchsorted.
+        candidates, decode each term in full (doc-sorted, cached under
+        ("s", -1, term)) and do ONE searchsorted.
         Docs matching no term score 0.0. Rounding matches rank_topk (4
         decimals) so tier ladders rank identically to the batch mode."""
         from .functions.codec import decode_block, decode_blocks
@@ -986,7 +890,6 @@ class IndexReader:
         dfs = self.df(terms)
         idf_map = {t: idf_fn(self.n_docs, dfs[t]) for t in terms if dfs[t] > 0}
         if idf_map:
-            dgen = self._decoded.generation  # pin BEFORE the frame fetch
             blocks = self._blocks(sorted(idf_map))
             lo, hi = int(doc_ids[0]), int(doc_ids[-1])
             sweep = len(doc_ids) >= self._SCORES_SWEEP_MIN
@@ -998,7 +901,7 @@ class IndexReader:
                 # per-block path below, which stays within the frame's
                 # memory envelope
                 if sweep and dfs[t] <= self._SWEEP_DF_CAP:
-                    cache = _NsDecodeCache(self._decoded, ("s", -1), dgen)
+                    cache = _NsDecodeCache(self, ("s", -1))
                     dec = cache.get(t)
                     if dec is None:
                         d, tf, dl = decode_blocks(pdf["n"], pdf["doc_gaps"], pdf["tfs"],
@@ -1037,16 +940,15 @@ class IndexReader:
         contract already governs when the reader sees mutations)."""
         import pyarrow.dataset as ds
 
-        cached = getattr(self, "_tier_specs_cache", None)
-        if cached is not None:
-            return cached
-        try:
-            d = ds.dataset(self.paths.tier_meta, format="parquet")
-            t = d.to_table(columns=["ord", "name"]).to_pydict()
-            specs = sorted(zip((int(o) for o in t["ord"]), t["name"]))
-        except FileNotFoundError:
-            specs = []
-        self._tier_specs_cache = specs
+        specs = self._cache.get(("tier_specs",))
+        if specs is None:
+            try:
+                d = ds.dataset(self.paths.tier_meta, format="parquet")
+                t = d.to_table(columns=["ord", "name"]).to_pydict()
+                specs = sorted(zip((int(o) for o in t["ord"]), t["name"]))
+            except FileNotFoundError:
+                specs = []
+            self._put(("tier_specs",), specs, 0)
         return specs
 
     @staticmethod
@@ -1069,26 +971,11 @@ class IndexReader:
             keep[j[ok]] = True
         return cand[keep]
 
-    def _tier_live_mask(self, uniq: "np.ndarray") -> "np.ndarray":
-        """Boolean mask of non-tombstoned entries in a SORTED doc-id
-        array — the one liveness rule shared by tier membership AND the
-        earlier-tiers-pin-top-k skip check (a dead match must neither
-        rank nor pin)."""
-        live = np.ones(len(uniq), dtype=bool)
-        if not len(uniq):
-            return live
-        for seg in self._dead_segs:
-            dead = self._dead(seg)
-            if dead is None:
-                continue
-            j = np.searchsorted(dead, uniq)
-            live &= ~((j < len(dead)) & (dead[np.minimum(j, len(dead) - 1)] == uniq))
-        return live
-
     def tiered_topk(self, query: str, k: int = 10) -> list[tuple[int, int, float]]:
-        return self._self_heal(lambda: self._tiered_topk_impl(query, k))
+        return self._query(lambda stats, t0: self._tiered_attempt(query, k, stats, t0))
 
-    def _tiered_topk_impl(self, query: str, k: int = 10) -> list[tuple[int, int, float]]:
+    def _tiered_attempt(self, query: str, k: int, stats: dict,
+                        t0: float) -> list[tuple[int, int, float]]:
         """[(doc_id, tier, score)] — the R1 tier ladder SERVED from the
         materialized tier containment index (operators/tiers.py;
         reference "exact title match wins", src/brain-scorer.ts:226-253)
@@ -1110,14 +997,6 @@ class IndexReader:
 
         from .functions.termhash import term_tid
 
-        t0 = time.time()
-        # reset the thread-local ST4 flag like every other query impl:
-        # without it, a prior budget-truncated query's True leaks into
-        # this answer whenever tier matches satisfy k (the fill-path
-        # topk resets it, the ≥k branch otherwise would not)
-        self.truncated = False
-        stats = {"segments_touched": 0, "blocks_considered": 0,
-                 "blocks_decoded": 0, "terms_cold": 0}
         specs = self._tier_specs()
         if not specs:
             raise FileNotFoundError(
@@ -1126,7 +1005,6 @@ class IndexReader:
             )
         terms = sorted(set(tokenize_query(query)))
         if not terms:
-            self._record_stats(stats, t0)
             return []
         tids = {term_tid(t) for t in terms}
         # body df bounds every tier-field list for the same term (tier
@@ -1135,35 +1013,27 @@ class IndexReader:
         # _scores_array call pays nothing extra
         df_by_tid = {term_tid(t): n for t, n in self.df(terms).items()}
         n_tiers = len(specs)
-        dgen = self._decoded.generation  # pin BEFORE any tier probe
 
         # tier membership: intersect each field's per-tid doc lists;
-        # first (best) tier wins per doc. Doc lists ride the decoded
-        # LRU (namespace ("t", field) — zipfian query terms repeat) and
-        # the dataset HANDLES are cached per refresh: per-query
-        # ds.dataset() re-discovery was a fixed several-ms cost, and a
-        # stale handle after an external mutation raises OSError into
-        # the _self_heal refresh+retry like every other surface.
+        # first (best) tier wins per doc. Doc lists are cached under
+        # ("t", field, tid) — zipfian query terms repeat — and so are
+        # the dataset HANDLES: per-query ds.dataset() re-discovery was a
+        # fixed several-ms cost, and a stale handle after an external
+        # mutation raises OSError into _run's self-heal like every
+        # other surface.
         # Membership/ranking is ARRAY-shaped end to end: a head term
         # tier-matches a large corpus share, and the former per-doc
         # dict/list/sort Python loops were ~0.8 s at 300k matches where
         # the vectorized form is milliseconds.
         cand_parts: list = []
         tier_parts: list = []
-        epoch0 = self._epoch  # cache installs below re-check this
         for ordi, name in specs:
-            with self._lock:
-                d = self._tier_ds_cache.get(ordi)
+            d = self._cache.get(("tier_ds", ordi))
             if d is None:
                 d = ds.dataset(f"{self.paths.tier_index}/field={ordi}_{name}",
                                format="parquet")
-                with self._lock:
-                    # don't resurrect a pre-refresh handle into the
-                    # just-cleared cache (same discipline as _df_cache
-                    # and the decoded LRU's generation guard)
-                    if self._epoch == epoch0:
-                        self._tier_ds_cache[ordi] = d
-            cache = _NsDecodeCache(self._decoded, ("t", ordi), dgen)
+                self._put(("tier_ds", ordi), d, 0)
+            cache = _NsDecodeCache(self, ("t", ordi))
             by_tid: dict[int, np.ndarray] = {}
             missing = []
             suspects = []
@@ -1189,7 +1059,7 @@ class IndexReader:
                 # and skipping on their count would silently drop live
                 # later-tier docs from the answer.
                 pinned = np.unique(np.concatenate(cand_parts))
-                pinned = pinned[self._tier_live_mask(pinned)]
+                pinned = pinned[self._live_mask(pinned)]
                 if k <= len(pinned):
                     continue
             huge = []
@@ -1199,15 +1069,11 @@ class IndexReader:
                 # a filtered column scan worth paying once, not per
                 # query): the windowed tier list is often far smaller
                 # than the body df
-                key = (ordi, tid)
-                with self._lock:
-                    over = self._tier_over_cap.get(key)
+                over = self._cache.get(("tier_over", ordi, tid))
                 if over is None:
                     over = (d.count_rows(filter=ds.field("tid") == tid)
                             > self._TIER_DF_CAP)
-                    with self._lock:
-                        if self._epoch == epoch0:
-                            self._tier_over_cap[key] = over
+                    self._put(("tier_over", ordi, tid), over, 0)
                 if over:
                     huge.append(tid)
                 else:
@@ -1239,13 +1105,6 @@ class IndexReader:
             for tid in huge:
                 if not len(cand):
                     break
-                # counted straight into totals: the <k fill path hands
-                # stats recording to topk(), which would drop a
-                # stats-dict-only increment — and a huge term cut down
-                # to few matches by a selective term is the COMMON
-                # streaming shape
-                with self._lock:
-                    self.totals["tier_stream_intersects"] += 1
                 stats["tier_stream_intersects"] = (
                     stats.get("tier_stream_intersects", 0) + 1)
                 cand = self._tier_stream_intersect(d, tid, cand)
@@ -1264,9 +1123,8 @@ class IndexReader:
             tier_arr = np.empty(0, dtype=np.int64)
 
         # liveness: drop tombstoned docs from tier membership
-        if len(uniq) and self._dead_segs:
-            live = self._tier_live_mask(uniq)
-            uniq, tier_arr = uniq[live], tier_arr[live]
+        live = self._live_mask(uniq)
+        uniq, tier_arr = uniq[live], tier_arr[live]
 
         scores = self._scores_array(terms, uniq)
         n_matched = len(uniq)
@@ -1276,23 +1134,22 @@ class IndexReader:
             # When k or more docs tier-matched, final-tier rows can
             # never reach the top k (tier sorts first): skip the run.
             matched = set(uniq.tolist())
-            fill = [(d, s) for d, s in self.topk(query, k=k + n_matched)
+            fill = [(d, s) for d, s in self._topk_attempt(query, k + n_matched, None, stats, t0)
                     if d not in matched]
             if fill:
                 uniq = np.concatenate([uniq, np.array([d for d, _ in fill], dtype=np.int64)])
                 tier_arr = np.concatenate([tier_arr, np.full(len(fill), n_tiers, dtype=np.int64)])
                 scores = np.concatenate([scores, np.array([s for _, s in fill], dtype=np.float64)])
-        else:
-            self._record_stats(stats, t0)
         order = np.lexsort((uniq, -scores, tier_arr))[:k]
         return [(int(uniq[i]), int(tier_arr[i]), float(scores[i])) for i in order]
 
     def references(self, symbol: str, k: int = 10,
                    max_positions: int = 100) -> list[dict]:
-        return self._self_heal(lambda: self._references_impl(symbol, k, max_positions))
+        return self._query(
+            lambda stats, t0: self._references_attempt(symbol, k, max_positions, stats))
 
-    def _references_impl(self, symbol: str, k: int = 10,
-                         max_positions: int = 100) -> list[dict]:
+    def _references_attempt(self, symbol: str, k: int, max_positions: int,
+                            stats: dict) -> list[dict]:
         """Where does `symbol` occur — [(doc_id, url, n_matches, token
         positions)] ranked by occurrence count, served from positional
         postings with no Spark job (the reference's `find_references`
@@ -1306,30 +1163,22 @@ class IndexReader:
         from .functions.tokenize import tokenize
         from .operators.phrase import segment_phrase_positions
 
-        t0 = time.time()
-        stats = {"segments_touched": 0, "blocks_considered": 0,
-                 "blocks_decoded": 0, "terms_cold": 0}
-        self.truncated = False
         if not self.has_positions:
             raise ValueError(
                 "find_references requires an index built with store_positions=True")
         terms = tokenize(symbol)
         if not terms:
-            self._record_stats(stats, t0)
             return []
-        dgen = self._decoded.generation  # pin BEFORE the frame fetch
         per_seg = self._pos_blocks_by_segment(sorted(set(terms)), stats)
         hits: list[tuple[int, "np.ndarray"]] = []
         for seg, by_term in per_seg.items():
             stats["segments_touched"] += 1
             hits.extend(segment_phrase_positions(
                 by_term, terms, self._dead(seg),
-                decoded_cache=_NsDecodeCache(self._decoded, ("p", seg), dgen),
-                stats=stats))
+                decoded_cache=_NsDecodeCache(self, ("p", seg)), stats=stats))
         hits.sort(key=lambda x: (-len(x[1]), x[0]))
         hits = hits[:k]
         url_map = self.urls([d for d, _ in hits])
-        self._record_stats(stats, t0)
         return [
             {"doc_id": d, "url": url_map.get(d), "n_matches": len(p),
              "positions": p[:max_positions].tolist()}
@@ -1369,9 +1218,9 @@ class IndexReader:
     DEF_PROSE_GUARD = ("the", "a", "an", "this", "that")
 
     def definitions(self, symbol: str, k: int = 10) -> list[dict]:
-        return self._self_heal(lambda: self._definitions_impl(symbol, k))
+        return self._query(lambda stats, t0: self._definitions_attempt(symbol, k, stats))
 
-    def _definitions_impl(self, symbol: str, k: int = 10) -> list[dict]:
+    def _definitions_attempt(self, symbol: str, k: int, stats: dict) -> list[dict]:
         """Where is `symbol` DEFINED — [(url, keyword, position)] ranked
         (keyword priority, position asc, doc_id asc): the serving form
         of the reference's `get_definition` MCP tool
@@ -1386,16 +1235,11 @@ class IndexReader:
         from .functions.tokenize import tokenize
         from .operators.phrase import segment_phrase_positions
 
-        t0 = time.time()
-        stats = {"segments_touched": 0, "blocks_considered": 0,
-                 "blocks_decoded": 0, "terms_cold": 0}
-        self.truncated = False
         if not self.has_positions:
             raise ValueError(
                 "get_definition requires an index built with store_positions=True")
         sym = tokenize(symbol)
         if not sym:
-            self._record_stats(stats, t0)
             return []
         # df-probe FIRST (cheap terms-dir reads, no position payloads):
         # an absent symbol token means no definition phrase can match,
@@ -1405,13 +1249,11 @@ class IndexReader:
         dfs = self.df(sorted(set(self.DEF_KEYWORDS) | set(self.DEF_TRAILERS)
                              | set(self.DEF_PROSE_GUARD) | set(sym)))
         if any(dfs[t] == 0 for t in sym):
-            self._record_stats(stats, t0)
             return []
         kws = [kw for kw in self.DEF_KEYWORDS if dfs[kw] > 0]
         tws = [tw for tw in self.DEF_TRAILERS if dfs[tw] > 0]
         guards = [g for g in self.DEF_PROSE_GUARD if dfs[g] > 0] if tws else []
         if not kws and not tws:
-            self._record_stats(stats, t0)
             return []
         # (form_rank, label, phrase, symbol-position offset within the
         # phrase): leading-keyword probes rank above every trailer probe
@@ -1420,7 +1262,6 @@ class IndexReader:
         forms += [(len(self.DEF_KEYWORDS) + ti, f"={tw}", sym + [tw], 0)
                   for ti, tw in enumerate(self.DEF_TRAILERS) if tw in set(tws)]
         labels = {rank: label for rank, label, _, _ in forms}
-        dgen = self._decoded.generation  # pin BEFORE the frame fetch
         per_seg = self._pos_blocks_by_segment(sorted(set(kws + tws + guards + sym)), stats)
         hits: list[tuple[int, int, int]] = []  # (form_rank, pos, doc)
         for seg, by_term in per_seg.items():
@@ -1430,14 +1271,14 @@ class IndexReader:
             if not seg_forms:
                 continue
             stats["segments_touched"] += 1
-            # decode accounting lives in the kernel (decoded-LRU hits
-            # must not be counted as decodes — review r5 finding)
+            # decode accounting lives in the kernel (cache hits must
+            # not be counted as decodes — review r5 finding)
             dead = self._dead(seg)
-            # persistent decoded LRU, not a per-call dict: the probe
-            # terms (definition keywords + hot symbols) repeat across
+            # the reader's cache, not a per-call dict: the probe terms
+            # (definition keywords + hot symbols) repeat across
             # queries, and the namespace is shared with phrase/
             # references (same frames, same _term_postings decode)
-            cache = _NsDecodeCache(self._decoded, ("p", seg), dgen)
+            cache = _NsDecodeCache(self, ("p", seg))
             for rank, _, phrase, sym_off in seg_forms:
                 matches = segment_phrase_positions(
                     by_term, phrase, dead, decoded_cache=cache, stats=stats)
@@ -1466,7 +1307,6 @@ class IndexReader:
                     hits.append((rank, int(pos[0]) + sym_off, doc))
         hits.sort()
         url_map = self.urls([d for _, _, d in hits[:k]])
-        self._record_stats(stats, t0)
         return [
             {"doc_id": d, "url": url_map.get(d),
              "keyword": labels[rank], "position": p}

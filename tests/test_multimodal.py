@@ -56,53 +56,3 @@ def test_frame_sampling(media):
         by_doc.setdefault(r.doc_id, []).append(r)
     assert all(len(v) <= 4 for v in by_doc.values())
     assert all(len(bytes(r.frame)) <= 64 for r in frames)
-
-
-def test_bmp_roundtrip_and_image_features(spark):
-    """REAL image decode: spec-conformant 24bpp BMP bytes parse back to
-    the exact pixel matrix, and image_features produces dims, mean
-    color, and the grid thumbnail through mapInPandas."""
-    import numpy as np
-    import pandas as pd
-
-    bmp = multimodal.make_bmp(13, 7, seed=3)  # odd width → row padding path
-    w, h, px = multimodal.decode_bmp(bmp)
-    assert (w, h) == (13, 7) and px.shape == (7, 13, 3)
-    # round-trip: re-encode the decoded pixels → identical pixels
-    rng = np.random.default_rng([3, 13, 7])
-    expect = rng.integers(0, 256, size=(7, 13, 3), dtype=np.uint8)[..., ::-1]  # BGR→RGB
-    assert (px == expect).all()
-
-    df = spark.createDataFrame(pd.DataFrame({
-        "doc_id": [1, 2],
-        "payload": [multimodal.make_bmp(16, 8, seed=1), multimodal.make_bmp(32, 32, seed=2)],
-    }))
-    rows = {r.doc_id: r for r in multimodal.image_features(df, grid=4).collect()}
-    assert rows[1].width == 16 and rows[1].height == 8
-    assert len(rows[1].thumb) == 16 and all(0.0 <= v <= 1.0 for v in rows[1].thumb)
-    assert 0 <= rows[2].mean_r <= 255
-
-    # BMP payloads also satisfy the generic metadata decoder
-    meta = multimodal.decode_metadata(df.withColumn("kind", F.lit("image"))).collect()
-    assert {(r.width, r.height) for r in meta} == {(16, 8), (32, 32)}
-
-
-def test_wav_roundtrip_and_audio_features(spark):
-    """REAL audio decode: stdlib-PCM WAV parses to sample rate /
-    duration / RMS; audio_features batches it through mapInPandas."""
-    import pandas as pd
-
-    wav = multimodal.make_wav(16000, sample_rate=16000, freq=440.0)
-    sr, nch, nframes, samples = multimodal.decode_wav(wav)
-    assert (sr, nch, nframes) == (16000, 1, 16000)
-    assert abs(float((samples**2).mean()) ** 0.5 - 0.4316) < 0.01  # sine RMS ≈ A/√2
-
-    df = spark.createDataFrame(pd.DataFrame({
-        "doc_id": [1, 2],
-        "payload": [wav, multimodal.make_wav(8000, sample_rate=8000, freq=100.0)],
-    }))
-    rows = {r.doc_id: r for r in multimodal.audio_features(df, target_sr=4000).collect()}
-    assert rows[1].duration_s == 1.0 and rows[1].sample_rate == 16000
-    assert rows[2].duration_s == 1.0 and rows[2].n_frames == 8000
-    assert 0.4 < rows[1].rms < 0.47
-    assert len(rows[1].resampled) == 4000

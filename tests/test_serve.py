@@ -29,8 +29,8 @@ def test_reader_matches_wand(spark, small_corpus):
         assert got == expected[q], q
     # absent term → empty, no error
     assert reader.topk("qqabsentterm", k=5) == []
-    # hot-term LRU populated after the query sweep
-    assert len(reader._blocks_lru) > 0
+    # term frames cached after the query sweep
+    assert any(key[0] == "blocks" for key in reader._cache._d)
 
 
 def test_reader_urls_and_search(spark, small_corpus):
@@ -675,12 +675,24 @@ def test_global_kernel_noncontiguous_merge_falls_back(spark, tmp_path, monkeypat
         assert reader.topk(q, k=8) == ex, q
 
 
+def _assert_dead_arrays_own_partition(reader):
+    """No cached tombstone array is longer than its own segment's
+    partition (outside a merge's in-flux window)."""
+    from mantic_sh_spark.operators.delete import segment_tombstones
+
+    cached = {key[1]: arr for key, (arr, _) in list(reader._cache._d.items())
+              if key[0] == "dead"}
+    assert cached, "the query should have loaded tombstone arrays"
+    for seg, arr in cached.items():
+        assert len(arr) <= len(segment_tombstones(reader.paths.tombstones, seg)), seg
+
+
 def test_dead_union_cap_routes_to_sweep(spark, small_corpus, tmp_path):
     """Outside a merge's in-flux window the global kernel checks each
-    block against its OWN segment's tombstone array — the union of all
-    segments' tombstones (8 B/id resident per replica) never
-    materializes, however churned the index — and ranks identically to
-    the per-segment sweep. (The name is kept from the union cap this
+    block against its OWN segment's tombstone array — no union of
+    segments' tombstones (8 B/id resident per replica) is ever cached,
+    however churned the index — and ranks identically to the
+    per-segment sweep. (The name is kept from the union cap this
     replaced.)"""
     import os
     import shutil
@@ -703,7 +715,7 @@ def test_dead_union_cap_routes_to_sweep(spark, small_corpus, tmp_path):
     assert reader.last_stats["strategy"] == "global"
     assert victim not in {d for d, _ in want}
     assert want == reader.topk(q, k=10, budget_ms=60_000)
-    assert reader._dead_union_cache is None
+    _assert_dead_arrays_own_partition(reader)
 
     # ~1e7 synthetic tombstones in segment 0's partition — doc ids far
     # past the real docs, so membership (and the answer) is unchanged
@@ -717,8 +729,7 @@ def test_dead_union_cap_routes_to_sweep(spark, small_corpus, tmp_path):
     got = reader.topk(q, k=10)
     assert reader.last_stats["strategy"] == "global"
     assert got == want == reader.topk(q, k=10, budget_ms=60_000)
-    assert reader._dead_union_cache is None, \
-        "the union must never materialize outside the in-flux window"
+    _assert_dead_arrays_own_partition(reader)
 
 
 def test_get_definition_assignment_forms(spark, tmp_path):
@@ -777,38 +788,159 @@ def test_get_definition_assignment_forms(spark, tmp_path):
     assert lam[0]["url"] == "https://ex.com/a2"
 
 
-def test_decoded_lru_budget_and_generation_guard():
-    """_DecodedLRU: byte-budget eviction (oldest first), oversized
-    entries served-but-never-cached, and the generation guard — a put
-    whose decode started before clear() must be dropped, never
-    installed into the new generation (review r5 finding)."""
+def test_lru_budget_and_epoch_guard():
+    """_LRU (the reader's one cache): byte-budget eviction (oldest
+    first), oversized entries served-but-never-cached, and the epoch
+    guard — a put whose attempt started before clear() must be dropped,
+    never installed into the new epoch (review r5 finding)."""
     import numpy as np
 
-    from mantic_sh_spark.serve import _DecodedLRU, _NsDecodeCache
+    from mantic_sh_spark.serve import _ENTRY_BYTES, _LRU
 
-    lru = _DecodedLRU(budget_bytes=100)
     a = np.zeros(5, dtype=np.int64)   # 40 bytes
-    b = np.zeros(5, dtype=np.int64)
-    c = np.zeros(5, dtype=np.int64)
-    lru.put(("k", "a"), (a,))
-    lru.put(("k", "b"), (b,))
+    lru = _LRU(budget=2 * (a.nbytes + _ENTRY_BYTES) + 10)  # room for two
+    e = lru.epoch
+    lru.put(("k", "a"), a, a.nbytes, e)
+    lru.put(("k", "b"), a, a.nbytes, e)
     assert lru.get(("k", "a")) is not None
-    lru.put(("k", "c"), (c,))  # 120 bytes total → evict LRU entry ("b")
+    lru.put(("k", "c"), a, a.nbytes, e)  # over budget → evict LRU entry ("b")
     assert lru.get(("k", "b")) is None
     assert lru.get(("k", "a")) is not None and lru.get(("k", "c")) is not None
+    assert lru.bytes <= lru.budget
     # oversized: served but never cached
-    lru.put(("k", "big"), (np.zeros(100, dtype=np.int64),))
+    big = np.zeros(100, dtype=np.int64)
+    lru.put(("k", "big"), big, big.nbytes, e)
     assert lru.get(("k", "big")) is None
 
-    # generation guard: adapter pinned pre-clear, put after clear → dropped
-    ns = _NsDecodeCache(lru, ("k", 0))
+    # epoch guard: a put carrying the pre-clear epoch is dropped
     lru.clear()
-    ns.put("stale", (a,))
-    assert lru.get(("k", 0, "stale")) is None
-    # a fresh adapter (post-clear) installs normally
-    ns2 = _NsDecodeCache(lru, ("k", 0))
-    ns2.put("fresh", (a,))
-    assert ns2.get("fresh") is not None
+    lru.put(("k", "stale"), a, a.nbytes, e)
+    assert lru.get(("k", "stale")) is None and lru.bytes == 0
+    # a put outside any attempt (no epoch) is dropped too
+    lru.put(("k", "none"), a, a.nbytes, None)
+    assert lru.get(("k", "none")) is None
+    # the current epoch installs normally
+    lru.put(("k", "fresh"), a, a.nbytes, lru.epoch)
+    assert lru.get(("k", "fresh")) is not None
+
+
+def test_lru_byte_count_under_concurrent_puts_and_clears():
+    """The _LRU byte count stays exact and within budget while 8 threads
+    put, get and clear concurrently (one lock covers every
+    read-modify-write of the count)."""
+    import sys
+    import threading
+
+    import numpy as np
+
+    from mantic_sh_spark.serve import _ENTRY_BYTES, _LRU
+
+    arr = np.zeros(10, dtype=np.int64)
+    lru = _LRU(budget=20 * (arr.nbytes + _ENTRY_BYTES))
+
+    def work(w):
+        for i in range(2000):
+            if w == 0 and i % 500 == 0:
+                lru.clear()
+            lru.put((w, i % 50), arr, arr.nbytes, lru.epoch)
+            lru.get((w, (i * 7) % 50))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=work, args=(w,)) for w in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(old)
+    assert lru.bytes == sum(nb for _, nb in lru._d.values()) <= lru.budget
+
+
+def test_cache_bytes_stay_within_budget(small_corpus, monkeypatch):
+    """Every cache entry is charged bytes, so distinct query terms can
+    not grow the reader without bound: 5,000 absent-term df probes keep
+    the cache at or under a few-KB budget."""
+    from mantic_sh_spark import serve as serve_mod
+
+    monkeypatch.setattr(serve_mod, "_CACHE_BUDGET", 4096)
+    reader = IndexReader(small_corpus["index_dir"])
+    for i in range(50):
+        dfs = reader.df([f"qqabsent{i}x{j}" for j in range(100)])
+        assert set(dfs.values()) == {0}
+        assert reader._cache.bytes <= reader._cache.budget == 4096
+    assert 0 < len(reader._cache._d) < 5000
+
+
+def _refresh_once_mid_attempt(monkeypatch, reader, name: str) -> list:
+    """Make reader.<name> — a method every attempt calls — run
+    reader.refresh() on its first call; returns the call log."""
+    calls = []
+    orig = getattr(reader, name)
+
+    def hooked(*args, **kwargs):
+        calls.append(name)
+        if len(calls) == 1:
+            reader.refresh()
+        return orig(*args, **kwargs)
+
+    monkeypatch.setattr(reader, name, hooked)
+    return calls
+
+
+def test_query_lifecycle_reruns_straddling_attempt(spark, small_corpus, tmp_path,
+                                                   monkeypatch):
+    """Every query entry point is one _query call: a refresh landing
+    mid-attempt re-runs the attempt against the new epoch, and the
+    query records its stats exactly once (queries +1, last_stats carries
+    ms) — for topk, phrase_topk, tiered_topk's fill path, references
+    and definitions alike."""
+    import shutil
+
+    import pandas as pd
+
+    from mantic_sh_spark.operators.index_build import build_index
+    from mantic_sh_spark.operators.tiers import build_tier_index
+
+    bm25 = str(tmp_path / "bm25")
+    shutil.copytree(small_corpus["index_dir"], bm25)
+    build_tier_index(spark, bm25)
+    pages = spark.createDataFrame(pd.DataFrame({
+        "url": [f"https://ex.com/l{i}" for i in range(3)],
+        "warc_ts": pd.to_datetime(["2026-01-01"] * 3),
+        "html": [b""] * 3,
+        "text": [
+            "def parseHtml turns markup into a tree",
+            "calls parseHtml twice then parseHtml again",
+            "filler words only nothing else",
+        ],
+        "lang": ["en"] * 3,
+    }))
+    pos = str(tmp_path / "pos")
+    build_index(spark, pages, pos, n_segments=1, store_positions=True)
+
+    cases = [
+        (bm25, "_blocks", lambda r: r.topk("w1x w5x", k=5)),
+        # one doc holds the needle: fewer than k tier matches → the fill
+        # runs too, and the whole ladder must re-run, not just the fill
+        (bm25, "_tier_specs", lambda r: r.tiered_topk("zzneedle0", k=10)),
+        (pos, "_pos_blocks_by_segment", lambda r: r.phrase_topk("parse html", k=5)),
+        (pos, "_pos_blocks_by_segment", lambda r: r.references("parseHtml", k=5)),
+        (pos, "_pos_blocks_by_segment", lambda r: r.definitions("parseHtml", k=5)),
+    ]
+    for idx, hook, run in cases:
+        want = run(IndexReader(idx))
+        assert want, hook
+        reader = IndexReader(idx)
+        calls = _refresh_once_mid_attempt(monkeypatch, reader, hook)
+        assert run(reader) == want, hook
+        assert len(calls) == 2, hook
+        assert reader.counters()["total"]["queries"] == 1, hook
+        assert "ms" in reader.last_stats, hook
+        if hook == "_tier_specs":  # the BM25 fill ran on the tiered stats
+            assert reader.last_stats["strategy"] == "global"
 
 
 def test_prewarm_and_recent_queries(spark, small_corpus, tmp_path):
